@@ -65,9 +65,10 @@ object IncrementalCorpus {
     StructField("quality_score", DoubleType),
     StructField("keep", BooleanType),
     // partition column derived from the merge key: the per-batch
-    // upsert rewrites only the id buckets its rows land in (the
-    // TableStore touched-partition contract), so MERGE cost tracks
-    // the touched-cluster membership, not the corpus
+    // upsert rewrites only the bucket files its keys may hit (the
+    // store's copy-on-write MERGE rewrites only files whose key zone
+    // or key probe admits an incoming key), so MERGE cost tracks the
+    // touched-cluster membership, not the corpus
     StructField("id_bucket", IntegerType)))
 
   /** Bucket count for NEW cluster-state tables. The modulus is baked

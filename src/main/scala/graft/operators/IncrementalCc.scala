@@ -41,7 +41,7 @@ import graft.store.TableStore
   *
   * Maintenance: each fold's COW upsert stages a small file set, so a
   * long-running deployment compacts the assignment table on its own
-  * cadence (`store.compact(table)` — both backends expose it); like
+  * cadence (`store.compact(table)`, on the TableStore trait); like
   * any table-format maintenance it is a throughput knob, never a
   * correctness one.
   */

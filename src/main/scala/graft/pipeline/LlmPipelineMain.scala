@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.streaming.{DocumentIngest, StreamingLshJob}
 
 /** Self-looping local deployment of the training-data side — the
@@ -49,8 +49,7 @@ object LlmPipelineMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // GRAFT_STORE=log selects the transactional manifest-log backend
-    val store = graft.store.TableStores.forEnv(spark, storeRoot)
+    val store = new LogTableStore(spark, storeRoot)
     def src = spark.readStream.schema(DocSchema).parquet(docsDir)
 
     val ingest = new DocumentIngest(store, "docs.ingested",

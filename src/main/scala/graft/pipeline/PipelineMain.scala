@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
-import graft.store.{LogTableStore, ParquetTableStore, TableStore}
+import graft.store.LogTableStore
 import graft.streaming.{BronzeStreamingJob, EventSource}
 import graft.wiki.Clock
 
@@ -35,9 +35,7 @@ object PipelineMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // GRAFT_STORE=log selects the transactional manifest-log backend
-    // (atomic commits, time travel); default is the parquet emulation
-    val store = graft.store.TableStores.forEnv(spark, storeRoot)
+    val store = new LogTableStore(spark, storeRoot)
     val ckpt = s"$storeRoot/__checkpoints__/bronze"
     val job = new BronzeStreamingJob(store, "bronze.raw_events", ckpt,
       Trigger.ProcessingTime("3 seconds"), Clock.system)

@@ -118,12 +118,11 @@ object MergeQueries extends QueryDsl {
     }),
 
     // S16: the changefeed CONSUMER — the downstream half s15's feed
-    // exists for: a keyed replica in a DIFFERENT backend (parquet
-    // emulation) maintained by applying two CDC windows of the
-    // transactional source's lifecycle (append+upsert, then
-    // delete+insert). The replica must equal the source's final
-    // state exactly — cross-backend replication from O(changed files)
-    // reads, never a full-table copy.
+    // exists for: a keyed replica in a SEPARATE store root maintained
+    // by applying two CDC windows of the source's lifecycle
+    // (append+upsert, then delete+insert). The replica must equal the
+    // source's final state exactly — replication from O(changed
+    // files) reads, never a full-table copy.
     "s16_cdc_replica" -> ((s, d) => {
       val src = new graft.store.LogTableStore(s,
         java.nio.file.Files.createTempDirectory("graft-cdcrsrc").toString)
@@ -145,7 +144,7 @@ object MergeQueries extends QueryDsl {
             col("price")),
         Seq("o_orderkey"))                                          // v5
       val v5 = src.versions("gate.src").last
-      val target = new graft.store.ParquetTableStore(s,
+      val target = new graft.store.LogTableStore(s,
         java.nio.file.Files.createTempDirectory("graft-cdcrdst").toString)
       graft.store.CdcReplica(src, "gate.src", target, "gate.dst",
         v1, v3, Seq("o_orderkey"))

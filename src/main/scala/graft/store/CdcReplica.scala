@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 /** Changefeed consumer — the downstream half the CDC feed exists for:
   * keep a keyed replica table in sync with a [[LogTableStore]] source
   * by applying `changes(from, to]` windows instead of full-table
-  * copies (Delta CDF's canonical use). The replica can live in ANY
-  * [[TableStore]] backend — cross-backend replication is the point:
-  * a downstream consumer need not share the source's table format,
-  * only its MERGE surface.
+  * copies (Delta CDF's canonical use). The replica is any
+  * [[TableStore]] table — typically a second [[LogTableStore]] root
+  * (another store, another process): the apply needs only the
+  * target's MERGE surface, not its log.
   *
   * Apply semantics per window: insert / update_postimage rows UPSERT
   * by key (the feed carries post-images, so a keyed upsert is exact
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: each window reads only the files the source log says
   * changed (the `changes` contract), the upsert is the target's
   * zone-pruned keyed MERGE, and deletes ride
-  * [[TableStore.deleteKeys]] — a zone/partition-pruned COW anti-join
+  * [[TableStore.deleteKeys]] — a zone-pruned COW anti-join
   * against the DISTRIBUTED delete-key frame, so a window carrying a
   * retention sweep's worth of deletes (a routine event at 100 TB)
   * never touches driver memory and never builds a literal predicate.

@@ -3,14 +3,12 @@ package graft.store
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.xxhash64
 
-/** Bloom-filter primitives shared by [[ParquetTableStore]] (sidecar
-  * `_keybloom.bin`) and [[LogTableStore]] (same sidecar beside the
-  * commit log). Built on Spark's own codegen'd BloomFilterAggregate /
-  * BloomFilterMightContain (the runtime-filter machinery) over
-  * xxhash64 of the key columns — no UDF, no driver loop. One
-  * implementation so the two stores can never drift on the hash or
-  * the merge layout (filters OR together only when built with the
-  * same (items, bits)). */
+/** Bloom-filter primitives behind [[LogTableStore]]'s key prefilter
+  * (the `_keybloom.bin` sidecar beside the commit log). Built on
+  * Spark's own codegen'd BloomFilterAggregate / BloomFilterMightContain
+  * (the runtime-filter machinery) over xxhash64 of the key columns —
+  * no UDF, no driver loop. Filters OR together only when built with
+  * the same (items, bits). */
 private[store] object KeyBloom {
 
   def keyHash(keys: Seq[String]): Column =

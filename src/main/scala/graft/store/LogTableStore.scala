@@ -43,12 +43,11 @@ private[store] final case class Manifest(version: Long,
                                          files: Seq[ManifestFile],
                                          txns: Map[String, Long] = Map.empty)
 
-/** Log-committed parquet TableStore: the transactional twin of
-  * [[ParquetTableStore]], closing the "emulated, non-atomic appends"
-  * gap the directory-listing store honestly discloses. The protocol is
-  * the public Delta-protocol/Iceberg model re-built on plain parquet +
-  * an atomic commit log (reference behavior: the Iceberg catalog the
-  * reference relies on for snapshot isolation and atomic MERGE —
+/** Log-committed parquet TableStore — the one [[TableStore]]
+  * implementation. The protocol is the public Delta-protocol/Iceberg
+  * model re-built on plain parquet + an atomic commit log (reference
+  * behavior: the Iceberg catalog the reference relies on for snapshot
+  * isolation and atomic MERGE —
   * bronze_streaming_job.py:265-270, :332-375):
   *
   *  - Data files are IMMUTABLE, written once under `data/` with
@@ -62,8 +61,7 @@ private[store] final case class Manifest(version: Long,
   *    log and retries (append; commutative) or aborts loudly
   *    (upsert/delete/merge-insert; their rewrite or anti-join was
   *    computed against a stale base). This is optimistic concurrency —
-  *    real MULTI-writer safety, not ParquetTableStore's single-writer
-  *    advisory lock.
+  *    real MULTI-writer safety, not a single-writer advisory lock.
   *  - COMMIT COST IS O(CHANGED FILES), NOT O(TABLE): ordinary commits
   *    are deltas; every [[checkpointInterval]] versions the writer
   *    also drops a `v<N>.checkpoint.json` carrying the full resolved
@@ -1320,9 +1318,8 @@ class LogTableStore(spark: SparkSession, root: String,
     * the diff reads the removed files (before-image) and the added
     * files (after-image) and nothing else: cost is O(changed files),
     * not O(table) — at 100 TB the difference between a changefeed and
-    * a nightly full-table compare. Output matches
-    * [[ParquetTableStore.diffSnapshots]]: the later version's columns
-    * with `_change_type` ∈ insert / delete / update_postimage.
+    * a nightly full-table compare. Output is the later version's
+    * columns with `_change_type` ∈ insert / delete / update_postimage.
     *
     * Assumes `keys` identify a row uniquely in each version — the
     * invariant the MERGE surface maintains. On a duplicate-key append
@@ -1346,7 +1343,8 @@ class LogTableStore(spark: SparkSession, root: String,
     val shared = mFrom.schema.fieldNames.toSet
       .intersect(mTo.schema.fieldNames.toSet).toSeq.sorted
     // JSON row signature (quotes/escapes values, omits null fields) so
-    // no two distinct rows alias — same construction as diffSnapshots
+    // no two distinct rows alias: a shifted column boundary or a NULL
+    // turned into "" still reads as an update
     def sig(df: DataFrame): DataFrame = df.withColumn("__sig",
       sha2(to_json(struct(shared.map(col): _*)), 256))
     // ONE full-outer join classifies all three change types — the
@@ -1436,9 +1434,7 @@ class LogTableStore(spark: SparkSession, root: String,
     resolved.keySet.count(_._1 == tkey(name))
 
   /** Manifest-resolved [[TableStore.smallFileCount]] — no file-system
-    * stat calls: the log already carries every live file's byte size.
-    * Same under-half-target rule as the trait (compaction's own
-    * right-sized output must not re-trip the maintenance trigger). */
+    * stat calls: the log already carries every live file's byte size. */
   override def smallFileCount(name: String, targetBytes: Long): Int =
     latest(name).map(_.files.count(_.bytes < targetBytes / 2)).getOrElse(0)
 
@@ -1641,15 +1637,14 @@ class LogTableStore(spark: SparkSession, root: String,
     }
 }
 
-/** Backend selection for the deployment mains: `GRAFT_STORE=log`
-  * picks the transactional manifest-log store, anything else the
-  * parquet emulation — one switch, because every pipeline component
-  * talks to the [[TableStore]] trait. */
+/** Store construction for the deployment mains and external
+  * harnesses. `env` is accepted for source compatibility with callers
+  * that still pass one and is not read: [[LogTableStore]] is the only
+  * backend. */
 object TableStores {
   def forEnv(spark: SparkSession, root: String,
              env: Map[String, String] = sys.env): TableStore =
-    if (env.get("GRAFT_STORE").contains("log")) new LogTableStore(spark, root)
-    else new ParquetTableStore(spark, root)
+    new LogTableStore(spark, root)
 }
 
 private[store] object LogTableStore {

@@ -1,30 +1,18 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Storage abstraction replacing the reference's Iceberg catalog
-  * (SURVEY §7.1 module 2). S5/S7/S8/S9/S11 map onto this trait; the
-  * parquet implementation emulates MERGE with the standard rewrites:
-  * insert-only = left-anti + append, full upsert = union +
-  * window-dedup + partition-scoped dynamic overwrite.
-  *
-  * Transactional-backend activation: a second implementation of this
-  * trait can delegate mergeInsertOnly/mergeUpsert/delete to real
-  * `MERGE INTO`/`DELETE FROM` once a table format is on the classpath —
-  * `iceberg-spark-runtime-4.0_2.13` (plus
-  * `spark.sql.extensions=org.apache.iceberg.spark.extensions
-  * .IcebergSparkSessionExtensions` and a catalog conf), or
-  * `delta-spark_2.13`. Neither jar ships in this environment, so the
-  * emulation below is the tested path; its MERGE semantics
-  * (insert-only = anti-join, upsert = incoming-wins on key, both
-  * idempotent under replay) are property-tested to match what the
-  * reference relies on from Iceberg (bronze_streaming_job.py:265-270,
-  * silver_batch_job.py:296-326).
+  * (SURVEY §7.1 module 2). S5/S7/S8/S9/S11 map onto this trait, and
+  * [[LogTableStore]] implements it: immutable parquet data files
+  * published by an atomic commit log, with copy-on-write MERGE
+  * (insert-only = zone/Bloom-pruned anti-join, upsert = incoming wins
+  * on key, both idempotent under replay) — the semantics the reference
+  * relies on from Iceberg (bronze_streaming_job.py:265-270,
+  * silver_batch_job.py:296-326). Pipeline components talk to the
+  * trait only; the transactional extras (time travel, CDC, vacuum,
+  * exactly-once appends) live on [[LogTableStore]] itself.
   */
 trait TableStore {
   /** S5: idempotent table creation (IF NOT EXISTS — an existing
@@ -33,16 +21,17 @@ trait TableStore {
   def ensure(name: String, schema: StructType, partitionBy: Seq[String] = Nil): Unit
   def exists(name: String): Boolean
   def scan(name: String): DataFrame
-  /** S4: scan with a partition-pruning range predicate. */
-  def scanRange(name: String, dateCol: String, start: String, end: String): DataFrame =
-    scan(name).where(col(dateCol).between(start, end))
+  /** S4: scan with a pruning range predicate — rows with `dateCol`
+    * in [start, end], reading only files that may hold them. */
+  def scanRange(name: String, dateCol: String, start: String, end: String): DataFrame
   /** S9: plain append. */
   def append(name: String, df: DataFrame): Unit
   /** S7: MERGE WHEN NOT MATCHED INSERT — returns rows actually inserted. */
   def mergeInsertOnly(name: String, incoming: DataFrame, keys: Seq[String]): Long
   /** S8: full upsert MERGE — incoming wins on matched keys. */
   def mergeUpsert(name: String, incoming: DataFrame, keys: Seq[String]): Unit
-  /** S11: delete rows matching a predicate (partition rewrite). */
+  /** S11: delete rows matching a predicate (copy-on-write rewrite of
+    * the files holding matches). Returns rows removed. */
   def delete(name: String, predicate: Column): Long
   /** Keyed delete: remove every row whose key tuple appears in
     * `keysDf` — a DISTRIBUTED DataFrame that is never collected to
@@ -73,1352 +62,5 @@ trait TableStore {
     * re-trip on compaction's own output once the table outgrows
     * threshold×targetBytes — a full rewrite every cycle, the exact
     * degradation a TOTAL-file-count trigger has. */
-  def smallFileCount(name: String, targetBytes: Long): Int = {
-    val conf = scan(name).sparkSession.sparkContext.hadoopConfiguration
-    scan(name).inputFiles.count { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      try p.getFileSystem(conf).getFileStatus(p).getLen < targetBytes / 2
-      catch { case _: java.io.IOException => false } // raced away: not small
-    }
-  }
-}
-
-/** Durable per-table metadata, persisted as `_meta.json` beside the
-  * data (the reference keeps the same facts in the Iceberg catalog:
-  * bronze_streaming_job.py:332-375). `evolved` records whether
-  * addColumn ever ran — only then does `scan` pay for parquet footer
-  * merging. */
-private[store] final case class TableMeta(schema: StructType,
-                                          partitionBy: Seq[String],
-                                          evolved: Boolean)
-
-/** Local parquet-backed TableStore.
-  *
-  * Scale notes:
-  *  - `mergeUpsert` rewrites only the partitions present in the
-  *    incoming batch (dynamic partition overwrite), so cost is
-  *    O(touched partitions), not O(table) — the same contract
-  *    Iceberg's copy-on-write MERGE gives.
-  *  - `mergeInsertOnly` probes only the target partitions present in
-  *    the incoming batch (see the contract on the method).
-  *  - Table metadata (declared schema, partition spec, evolution bit)
-  *    is persisted as `_meta.json` under the table path and reloaded
-  *    lazily, so a restarted job sees the declared types (not
-  *    partition-inferred ones) and any prior addColumn evolutions.
-  *
-  * Local-filesystem seam: directory listing/rename uses java.nio; a
-  * cluster deployment swaps these for the Hadoop FileSystem API (the
-  * only non-portable surface — all data movement is Spark-native).
-  */
-class ParquetTableStore(spark: SparkSession, root: String,
-                        format: String = "parquet") extends TableStore {
-
-  private val metas = TrieMap.empty[String, TableMeta]
-
-  private def path(name: String): String = s"$root/${name.replace('.', '/')}"
-  private def metaPath(name: String) = Paths.get(path(name), "_meta.json")
-
-  private def hasData(name: String): Boolean =
-    hasDataIn(Paths.get(path(name)))
-
-  /** True iff the directory holds at least one actual data FILE (any
-    * regular file outside hidden/meta paths). Checking top-level
-    * entries is not enough: a delete that removes every row of a
-    * partitioned table leaves empty `col=value` directory skeletons,
-    * and treating those as data would send an empty table down the
-    * parquet-load path (UNABLE_TO_INFER_SCHEMA) instead of the
-    * declared-schema empty-frame branch. */
-  private def hasDataIn(p: java.nio.file.Path): Boolean = {
-    if (!Files.exists(p)) return false
-    val stream = Files.walk(p)
-    try stream.anyMatch { f =>
-      Files.isRegularFile(f) && {
-        val rel = p.relativize(f)
-        (0 until rel.getNameCount).forall { i =>
-          val s = rel.getName(i).toString
-          !s.startsWith("_") && !s.startsWith(".")
-        }
-      }
-    } finally stream.close()
-  }
-
-  // ---- metadata persistence -------------------------------------------
-
-  private def persistMeta(name: String, meta: TableMeta): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    Files.createDirectories(Paths.get(path(name)))
-    val j = JObject(List(
-      "schema" -> JsonMethods.parse(meta.schema.json),
-      "partitionBy" -> JArray(meta.partitionBy.map(JString(_)).toList),
-      "evolved" -> JBool(meta.evolved)))
-    val tmp = Paths.get(path(name), s"._meta.${System.nanoTime()}.tmp")
-    Files.write(tmp, JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaPath(name), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    metas.put(name, meta)
-  }
-
-  private def readMetaFile(p: java.nio.file.Path): Option[TableMeta] = {
-    if (!Files.exists(p)) return None
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val j = JsonMethods.parse(new String(Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8))
-    val schema = DataType.fromJson(
-      JsonMethods.compact(JsonMethods.render(j \ "schema"))).asInstanceOf[StructType]
-    val parts = (j \ "partitionBy") match {
-      case JArray(xs) => xs.collect { case JString(s) => s }
-      case _          => Nil
-    }
-    val evolved = (j \ "evolved") match { case JBool(b) => b; case _ => false }
-    Some(TableMeta(schema, parts, evolved))
-  }
-
-  private def loadMeta(name: String): Option[TableMeta] =
-    readMetaFile(metaPath(name)).map { meta => metas.put(name, meta); meta }
-
-  /** Registry lookup with lazy reload from `_meta.json` — survives JVM
-    * restart (a standalone batch run against an existing store sees
-    * declared types, not partition-inferred ones). */
-  private[store] def metaOf(name: String): Option[TableMeta] =
-    metas.get(name).orElse(loadMeta(name))
-
-  // ---- DDL ------------------------------------------------------------
-
-  override def ensure(name: String, schema: StructType,
-                      partitionBy: Seq[String]): Unit =
-    metaOf(name) match {
-      case Some(_) => () // IF NOT EXISTS: keep persisted (possibly evolved) schema
-      case None    => persistMeta(name, TableMeta(schema, partitionBy, evolved = false))
-    }
-
-  override def exists(name: String): Boolean =
-    metaOf(name).isDefined || hasData(name)
-
-  override def addColumn(name: String, field: StructField): Unit =
-    metaOf(name) match {
-      case Some(m) if !m.schema.fieldNames.contains(field.name) =>
-        persistMeta(name, m.copy(schema = m.schema.add(field), evolved = true))
-      case _ => ()
-    }
-
-  // ---- reads ----------------------------------------------------------
-
-  override def scan(name: String): DataFrame =
-    readAligned(path(name), metaOf(name),
-      s"unknown table $name — ensure() first")
-
-  /** Corruption-tolerant scan: skips unreadable data files instead of
-    * failing the job (`ignoreCorruptFiles`, scoped to this read, not
-    * session-wide). The degraded-read escape hatch for fleet-scale
-    * storage where a torn write or bit rot in ONE of millions of files
-    * must not kill a 1000-executor batch; pair with `compactRepair`
-    * (which rewrites from surviving rows — plain `compact` reads
-    * strictly and would hit the same corruption) to repair. Normal
-    * scans stay strict
-    * — silent data loss must be an explicit caller choice. */
-  def scanLenient(name: String): DataFrame =
-    readAligned(path(name), metaOf(name),
-      s"unknown table $name — ensure() first", lenient = true)
-
-  /** Declared-schema-aligned read of a table or snapshot directory. */
-  private def readAligned(dir: String, meta: Option[TableMeta],
-                          unknownMsg: String,
-                          lenient: Boolean = false): DataFrame = {
-    if (hasDataIn(Paths.get(dir))) {
-      // Footer-merging is O(files) planning cost, so pay it only for
-      // tables that actually evolved (files written before an
-      // addColumn lack the new column); otherwise trust one footer.
-      val reader0 =
-        if (meta.exists(_.evolved)) spark.read.option("mergeSchema", "true")
-        else spark.read
-      val reader =
-        if (lenient) reader0.option("ignoreCorruptFiles", "true")
-        else reader0
-      val raw = reader.format(format).load(dir)
-      // partition-column type inference turns "2024-01-02" partition
-      // values into DATEs on read-back; realign to the declared schema
-      // (the reference keeps event_date/run_date as STRING). Columns
-      // added via addColumn that predate the data surface as NULL.
-      meta match {
-        case Some(m) => alignTo(raw, m)
-        case _       => raw
-      }
-    } else meta match {
-      case Some(m) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      case None =>
-        throw new IllegalArgumentException(unknownMsg)
-    }
-  }
-
-  /** Realign a raw read to the declared schema: declared column order,
-    * declared types (partition-column inference undone), NULL for
-    * evolved columns predating the data. */
-  private def alignTo(raw: DataFrame, m: TableMeta): DataFrame =
-    raw.select(m.schema.fields.toSeq.map { f =>
-      if (raw.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-
-  // ---- zone-map file pruning ------------------------------------------
-  // comparability/parse/compare/render and the footer-stat proofs live
-  // in the shared [[Zones]] object (LogTableStore prunes by the same
-  // rules from its commit manifests)
-
-  private def zoneComparable(dt: DataType): Boolean = Zones.comparable(dt)
-  private def zoneParse(dt: DataType, s: String): Any = Zones.parse(dt, s)
-  private def zoneCmp(dt: DataType, a: Any, b: Any): Int = Zones.cmp(dt, a, b)
-
-  // ---- zone-map stats sidecar ---------------------------------------
-  // scanRange's file pruning needs per-file [min, max] zones; r5 read
-  // every parquet footer driver-side on every query — O(files)
-  // planning IO that becomes the bottleneck at 100× file counts. The
-  // zones now persist in a `_zonemap.json` sidecar (the Iceberg-
-  // manifest analogue), keyed by file path RELATIVE to the table
-  // root. The key insight making a cached entry valid forever: data
-  // files are IMMUTABLE once written — every rewrite stages new files
-  // and swaps, and Spark part-file names carry a per-job UUID, so a
-  // path is never reused with different contents. Sync therefore only
-  // has to (a) read footers for files the sidecar doesn't know and
-  // (b) drop entries whose files are gone. append/compact sync
-  // eagerly so the next query plans with zero footer IO; every other
-  // mutation path (delete, upsert, rollback — their swaps may even
-  // delete the sidecar with the table dir) is healed lazily by the
-  // next scanRange. Per column an entry is min/max (strings), a
-  // PROVEN all-null flag, or unknown — and unknown always keeps the
-  // file.
-
-  /** Diagnostic counter: parquet footers opened for zone planning
-    * (the spec pins "second query = zero footer reads"). */
-  private[store] val footerZoneReads =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def zoneSidecarPath(name: String) =
-    Paths.get(path(name), "_zonemap.json")
-
-  /** Data FILES under the table root, excluding hidden/meta/staging
-    * paths — the same component filter as [[hasDataIn]]. r5's listing
-    * took every `*.parquet` under the root, so a crashed or in-flight
-    * append's `_temporary` partials could surface uncommitted
-    * phantom rows through scanRange (or throw on a half-written
-    * footer) while scan() excluded them. */
-  private def dataFiles(name: String): Seq[java.nio.file.Path] = {
-    val rootP = Paths.get(path(name))
-    if (!Files.exists(rootP)) return Nil
-    val suffix = if (format == "parquet") ".parquet" else s".$format"
-    val stream = Files.walk(rootP)
-    try stream.filter { f =>
-      f.toString.endsWith(suffix) && Files.isRegularFile(f) && {
-        val rel = rootP.relativize(f)
-        (0 until rel.getNameCount).forall { i =>
-          val s = rel.getName(i).toString
-          !s.startsWith("_") && !s.startsWith(".")
-        }
-      }
-    }.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
-    finally stream.close()
-  }
-
-  private def zoneColumns(meta: TableMeta): Seq[StructField] =
-    meta.schema.fields.toSeq
-      .filterNot(f => meta.partitionBy.contains(f.name))
-      .filter(f => zoneComparable(f.dataType))
-
-  /** Footer → per-column zones for one file (one counted footer read);
-    * the stat proofs live in [[Zones.readFooter]]. */
-  private def readFooterZones(f: java.nio.file.Path,
-                              cols: Seq[StructField]): Map[String, ZoneEntry] = {
-    footerZoneReads.incrementAndGet()
-    Zones.readFooter(spark.sessionState.newHadoopConf(), f, cols)._2
-  }
-
-  /** Diagnostic counter: full sidecar JSON parses (the memo-miss
-    * path; the spec pins "steady-state planning = one stat, zero
-    * parses"). */
-  private[store] val sidecarParses =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def loadZoneSidecar(name: String)
-      : Map[String, Map[String, ZoneEntry]] = {
-    val p = zoneSidecarPath(name)
-    if (!Files.exists(p)) return Map.empty
-    // memoized per root::table, validated by (size, full-precision
-    // mtime): steady state costs one stat instead of an O(files)
-    // JSON-AST parse PER QUERY — the planning-cost shape the sidecar
-    // exists to kill, and the same driver class as the log store's
-    // streaming-codec fix. FileTime compares at the filesystem's full
-    // resolution (nanoseconds on every modern Linux FS), so a
-    // same-size rewrite inside one millisecond still invalidates.
-    // Staleness is safe by the sidecar's own design: entries are
-    // keyed by rel path and part-file names are never reused, so a
-    // mismatched memo only degrades to the documented lost-sidecar
-    // semantics (unknown files re-learn from footers, dead entries
-    // drop) — never wrong zones.
-    val (size, mtime) =
-      try (Files.size(p), Files.getLastModifiedTime(p))
-      catch { case scala.util.control.NonFatal(_) => return Map.empty }
-    ParquetTableStore.zoneSidecars.get(bkey(name)) match {
-      case Some((s0, t0, m)) if s0 == size && t0 == mtime => m
-      case _ =>
-        sidecarParses.incrementAndGet()
-        val parsed = parseZoneSidecar(p)
-        ParquetTableStore.zoneSidecars.put(bkey(name),
-          (size, mtime, parsed))
-        parsed
-    }
-  }
-
-  private def parseZoneSidecar(p: java.nio.file.Path)
-      : Map[String, Map[String, ZoneEntry]] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    try {
-      JsonMethods.parse(new String(Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)) match {
-        case JObject(files) => files.toMap.map { case (rel, colsJ) =>
-          rel -> (colsJ match {
-            case JObject(cs) => cs.toMap.map { case (cname, e) =>
-              val minS = e \ "min" match { case JString(s) => Some(s); case _ => None }
-              val maxS = e \ "max" match { case JString(s) => Some(s); case _ => None }
-              val an = e \ "allNull" match { case JBool(b) => b; case _ => false }
-              cname -> ZoneEntry(minS, maxS, an)
-            }
-            case _ => Map.empty[String, ZoneEntry]
-          })
-        }
-        case _ => Map.empty[String, Map[String, ZoneEntry]]
-      }
-    } catch { // corrupt/truncated sidecar → rebuild from footers
-      case scala.util.control.NonFatal(_) =>
-        Map.empty[String, Map[String, ZoneEntry]]
-    }
-  }
-
-  private def writeZoneSidecar(name: String,
-      m: Map[String, Map[String, ZoneEntry]]): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val j = JObject(m.toList.sortBy(_._1).map { case (rel, cols) =>
-      rel -> JObject(cols.toList.sortBy(_._1).map { case (c, e) =>
-        c -> JObject(List(
-          "min" -> e.minS.map(JString(_): JValue).getOrElse(JNull),
-          "max" -> e.maxS.map(JString(_): JValue).getOrElse(JNull),
-          "allNull" -> JBool(e.allNull)))
-      })
-    })
-    val tmp = Paths.get(path(name), s"._zonemap.${System.nanoTime()}.tmp")
-    Files.write(tmp, JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // stat the TMP before the atomic move (rename preserves size and
-    // mtime): the write-through memo below is then paired with OUR
-    // file's identity, never a racing writer's — if another writer's
-    // move lands after ours, the live sidecar's stat differs from the
-    // memoized one and the next load reparses (stale-but-safe; see
-    // loadZoneSidecar). Statting after the move could capture the
-    // RACING file's stat against OUR map — the one pairing that
-    // silently defeats the zero-reparse steady state.
-    val stat = try Some((Files.size(tmp), Files.getLastModifiedTime(tmp)))
-               catch { case scala.util.control.NonFatal(_) => None }
-    Files.move(tmp, zoneSidecarPath(name), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    stat.foreach { case (sz, mt) =>
-      ParquetTableStore.zoneSidecars.put(bkey(name), (sz, mt, m))
-    }
-  }
-
-  /** Up-to-date (file, col → zone) for the CURRENT data files:
-    * sidecar-answered where known, footer-read (and persisted) where
-    * not, dead entries dropped. Steady state — every file known — is
-    * one listing + one small JSON read, zero footer opens. */
-  private def syncZoneSidecar(name: String)
-      : Seq[(java.nio.file.Path, Map[String, ZoneEntry])] = {
-    val metaO = metaOf(name)
-    if (metaO.isEmpty || format != "parquet") return Nil
-    val cols = zoneColumns(metaO.get)
-    if (cols.isEmpty) return Nil
-    val rootP = Paths.get(path(name))
-    val known = loadZoneSidecar(name)
-    var learned = false
-    val current = dataFiles(name).map { f =>
-      val rel = rootP.relativize(f).toString
-      val zones = known.get(rel) match {
-        // schema evolution: an entry missing a (new) zone column is
-        // re-learned from the footer once
-        case Some(z) if cols.forall(c => z.contains(c.name)) => z
-        case _ => learned = true; readFooterZones(f, cols)
-      }
-      (f, rel, zones)
-    }
-    if (learned || current.size != known.size)
-      writeZoneSidecar(name,
-        current.map { case (_, rel, z) => rel -> z }.toMap)
-    current.map { case (f, _, z) => (f, z) }
-  }
-
-  /** The data files whose [min, max] zone for `field` intersects
-    * [start, end] — plus, conservatively, every file whose zone is
-    * unknown. Answered from the persisted sidecar; footers are opened
-    * only for files the sidecar has never seen. */
-  private def zoneMapFiles(name: String, field: StructField,
-                           start: String, end: String): Seq[String] = {
-    val dt = field.dataType
-    // a range literal that doesn't parse as the column's declared type
-    // must degrade to "no pruning" (keep every file), never throw —
-    // same contract as LogTableStore.candidateFilesOpen
-    val parsed = scala.util.Try((zoneParse(dt, start), zoneParse(dt, end)))
-    if (parsed.isFailure)
-      return syncZoneSidecar(name).map { case (f, _) => f.toString }
-    val (lo, hi) = parsed.get
-    syncZoneSidecar(name).flatMap { case (f, zones) =>
-      zones.get(field.name) match {
-        case Some(e) if e.allNull => None // no row can satisfy a BETWEEN
-        case Some(ZoneEntry(Some(mn), Some(mx), _)) =>
-          if (zoneCmp(dt, zoneParse(dt, mx), lo) >= 0 &&
-              zoneCmp(dt, zoneParse(dt, mn), hi) <= 0) Some(f.toString)
-          else None
-        case _ => Some(f.toString) // unknown → keep
-      }
-    }
-  }
-
-  /** S4 on a NON-partition column gets zone-map file pruning: the
-    * file list is filtered by parquet-footer min/max BEFORE the scan
-    * is planned, so files whose zone misses the range are never
-    * opened, split, or scheduled — Iceberg's manifest pruning,
-    * answered from the persisted `_zonemap.json` sidecar (footers are
-    * opened only for files the sidecar has never seen — steady state
-    * is zero footer IO per query). This is the read-side payoff of
-    * `compact(clusterBy)` / `compactZOrder`: clustering narrows each
-    * file's zone, pruning then skips most files. Partition columns
-    * keep Catalyst's partition pruning (already optimal); unsupported
-    * column types and stats-less files fall back conservatively. The
-    * surviving-file read still carries the row-level predicate, so
-    * results are identical by construction. */
-  override def scanRange(name: String, dateCol: String, start: String,
-                         end: String): DataFrame = {
-    val meta = metaOf(name)
-    val field = meta.flatMap(_.schema.fields.find(_.name == dateCol))
-    val parts = meta.map(_.partitionBy).getOrElse(Nil)
-    val zoneable = format == "parquet" && meta.isDefined &&
-      !parts.contains(dateCol) && field.exists(f => zoneComparable(f.dataType)) &&
-      hasData(name)
-    if (!zoneable) super.scanRange(name, dateCol, start, end)
-    else {
-      val keep = zoneMapFiles(name, field.get, start, end)
-      if (keep.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          meta.get.schema)
-      else {
-        val reader0 =
-          if (meta.exists(_.evolved)) spark.read.option("mergeSchema", "true")
-          else spark.read
-        val raw = reader0.option("basePath", path(name))
-          .format(format).load(keep: _*)
-        alignTo(raw, meta.get).where(col(dateCol).between(start, end))
-      }
-    }
-  }
-
-  // ---- snapshots (time travel / rollback) -----------------------------
-  //
-  // The reference gets snapshot isolation, time travel, and rollback
-  // from the Iceberg catalog (bronze_streaming_job.py:332-375 +
-  // maintenance's expire_snapshots). This store reproduces the model
-  // on plain parquet: every data file is IMMUTABLE once written (all
-  // rewrites stage new files and swap), so a snapshot is just a pin on
-  // the current file set. Locally the pin is a hardlink tree (zero
-  // copy; the linked inode survives later rewrites deleting the
-  // original directory entry); a cluster deployment swaps the link
-  // step for a manifest of file paths — Iceberg's own model — behind
-  // the same API.
-
-  private def snapRoot(name: String) =
-    Paths.get(root, "__snapshots__", name.replace('.', '/'))
-
-  /** Pin the table's current state as a new immutable version (data
-    * files hardlinked, `_meta.json` copied so `scanAt` sees the schema
-    * as of the snapshot). Returns the version id (1-based, dense). */
-  def snapshot(name: String): Long = {
-    require(metaOf(name).isDefined || hasData(name), s"unknown table $name")
-    val v = snapshots(name).lastOption.getOrElse(0L) + 1L
-    val src = Paths.get(path(name))
-    val dst = snapRoot(name).resolve(s"v$v")
-    Files.createDirectories(dst)
-    if (Files.exists(src)) linkTree(src, dst)
-    v
-  }
-
-  /** Existing snapshot versions, ascending. */
-  def snapshots(name: String): Seq[Long] = {
-    val d = snapRoot(name)
-    if (!Files.exists(d)) return Nil
-    val s = Files.list(d)
-    try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .map(_.getFileName.toString)
-      .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-      .sorted.toSeq
-    finally s.close()
-  }
-
-  /** Time travel: read the table as of snapshot `version`, aligned to
-    * the schema THAT version declared (a later addColumn does not
-    * appear). */
-  def scanAt(name: String, version: Long): DataFrame = {
-    val dir = snapRoot(name).resolve(s"v$version")
-    require(Files.exists(dir), s"no snapshot v$version of table $name")
-    readAligned(dir.toString, readMetaFile(dir.resolve("_meta.json")),
-      s"snapshot v$version of $name has no metadata")
-  }
-
-  /** Change-data feed between two snapshots (CDC over immutable
-    * versions, like Delta's table_changes / Iceberg's changelog scan):
-    * rows keyed by `keys` that were inserted, deleted, or updated
-    * going from `fromVersion` to `toVersion`. Output = the later
-    * version's columns for insert/update_postimage, the earlier's for
-    * delete, plus `_change_type`. Comparison is by key membership +
-    * full-row equality hash — two anti/semi joins on the key columns,
-    * no window over either version. */
-  def diffSnapshots(name: String, fromVersion: Long, toVersion: Long,
-                    keys: Seq[String]): DataFrame = {
-    val before = scanAt(name, fromVersion)
-    val after = scanAt(name, toVersion)
-    val shared = before.columns.toSet.intersect(after.columns.toSet).toSeq.sorted
-    // to_json(struct(...)) keeps column boundaries and NULLs fully
-    // unambiguous: even a separator-based concat aliases when a value
-    // itself contains the separator/NULL-marker characters; JSON
-    // quotes and escapes values and omits (rather than marks) null
-    // fields, so no two distinct rows share a signature
-    def rowSig(df: DataFrame): DataFrame =
-      df.withColumn("__sig",
-        sha2(to_json(struct(shared.map(col): _*)), 256))
-    val b = rowSig(before)
-    val a = rowSig(after)
-    val inserted = a.join(before.select(keys.map(col): _*), keys, "left_anti")
-      .withColumn("_change_type", lit("insert"))
-    val deleted = b.join(after.select(keys.map(col): _*), keys, "left_anti")
-      .withColumn("_change_type", lit("delete"))
-    val updated = a.join(
-        b.select((keys.map(col) :+ col("__sig").as("__sig_b")): _*),
-        keys, "inner")
-      .filter(col("__sig") =!= col("__sig_b")).drop("__sig_b")
-      .withColumn("_change_type", lit("update_postimage"))
-    inserted.unionByName(deleted, allowMissingColumns = true)
-      .unionByName(updated, allowMissingColumns = true)
-      .drop("__sig")
-  }
-
-  /** Restore the table to snapshot `version` (data AND schema). The
-    * snapshot itself is immutable and survives — rolling forward again
-    * is just another rollback. */
-  def rollback(name: String, version: Long): Unit = withWriteLock(name) {
-    val dir = snapRoot(name).resolve(s"v$version")
-    require(Files.exists(dir), s"no snapshot v$version of table $name")
-    val target = Paths.get(path(name))
-    deleteRecursively(target)
-    Files.createDirectories(target)
-    linkTree(dir, target)
-    metas.remove(name)
-    loadMeta(name) // refresh the registry from the restored _meta.json
-    ()
-  }
-
-  /** Maintenance twin of the reference's `expire_snapshots` job: drop
-    * all but the newest `keepLast` snapshot versions. Deleting a
-    * version removes only directory entries — data files shared with
-    * the live table (or a surviving snapshot) keep their other
-    * hardlinks, so storage is reclaimed exactly when the last pin on a
-    * file disappears, the same reachability rule Iceberg applies to
-    * manifests. Returns the expired version ids. */
-  def expireSnapshots(name: String, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 0, s"keepLast must be >= 0, got $keepLast")
-    val expired = snapshots(name).dropRight(keepLast)
-    expired.foreach(v => deleteRecursively(snapRoot(name).resolve(s"v$v")))
-    expired
-  }
-
-  /** Mirror `src` into `dst`: directories recreated, data files
-    * hardlinked (immutable), metadata copied (mutable on the live
-    * side). Hidden/temp entries are skipped. */
-  private def linkTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val stream = Files.walk(src)
-    try stream.forEach { p =>
-      val n = p.getFileName.toString
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) {
-        if (!n.startsWith(".")) Files.createDirectories(t)
-      } else if (n == "_meta.json") {
-        Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-      } else if (!n.startsWith("_") && !n.startsWith(".")) {
-        Files.createLink(t, p)
-      }
-    } finally stream.close()
-  }
-
-  // ---- writes ---------------------------------------------------------
-
-  /** Single-writer guard: every mutating operation holds an advisory
-    * OS file lock (`_writer.lock`) on the table for its duration. The
-    * staging-then-swap rewrite protocol assumes one writer per table —
-    * two concurrent writers would interleave directory swaps and
-    * corrupt SILENTLY; the lock turns that into a loud
-    * ConcurrentModificationException instead (the reference gets the
-    * equivalent from Iceberg's optimistic commit conflict). OS locks
-    * release on process death (no stale-lock recovery needed), and a
-    * same-JVM overlap surfaces as OverlappingFileLockException, which
-    * we report identically.
-    *
-    * The lock file lives OUTSIDE the table directory (in a sibling
-    * `__locks__/` dir under the store root): overwrite-swap, delete's
-    * clear-all branch, and rollback all delete/recreate the table dir
-    * itself, and a lock file inside it would be deleted mid-hold —
-    * a second writer would then recreate the path on a fresh inode and
-    * tryLock would succeed, silently readmitting the concurrent-writer
-    * race during exactly the swap window the lock protects. */
-  private def withWriteLock[T](name: String)(body: => T): T = {
-    Files.createDirectories(Paths.get(path(name)))
-    Files.createDirectories(Paths.get(s"$root/__locks__"))
-    val ch = java.nio.channels.FileChannel.open(
-      Paths.get(s"$root/__locks__", s"$name.lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val lock =
-        try ch.tryLock()
-        catch { case _: java.nio.channels.OverlappingFileLockException => null }
-      if (lock == null)
-        throw new java.util.ConcurrentModificationException(
-          s"table $name has a concurrent writer (advisory _writer.lock " +
-            "is held) — ParquetTableStore is single-writer per table")
-      try body finally lock.release()
-    } finally ch.close()
-  }
-
-  override def append(name: String, df: DataFrame): Unit =
-    withWriteLock(name) { appendLocked(name, df) }
-
-  private def appendLocked(name: String, df: DataFrame): Unit = {
-    val parts = metaOf(name).map(_.partitionBy).getOrElse(Nil)
-    val w = df.write.mode(SaveMode.Append)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .format(format).save(path(name))
-    // learn the new files' zones NOW (write/compact time is when the
-    // footers are hot) so the next scanRange plans with zero footer
-    // IO; advisory only — a failure here is healed by the lazy sync
-    try syncZoneSidecar(name)
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** Above this many distinct incoming partition tuples the probe
-    * falls back to a full-table key scan (an unbounded OR-of-equals
-    * filter would bloat the plan; a batch touching thousands of
-    * partitions is a backfill, where a full probe is proportionate). */
-  private val MaxProbePartitions = 256
-
-  /** Static OR-of-equals filter matching the distinct partition tuples
-    * present in `of`, collected driver-side (bounded). None = too many
-    * tuples (backfill-wide batch) — callers fall back to an unpruned
-    * plan. An empty `of` yields Some(false), i.e. an empty scan. The
-    * static form matters because it reaches the file source as
-    * PartitionFilters — a semi-join against the touched set would
-    * filter rows but still read every file. */
-  private def touchedPartitionFilter(of: DataFrame,
-                                     parts: Seq[String]): Option[Column] = {
-    val touched = of.select(parts.map(col): _*).distinct()
-      .limit(MaxProbePartitions + 1).collect()
-    if (touched.length > MaxProbePartitions) None
-    else Some(touched.toSeq.map { r =>
-      parts.zipWithIndex.map { case (p, i) => col(p) <=> lit(r.get(i)) }
-        .reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false)))
-  }
-
-  /** Builds the "rows not already in the target" plan for
-    * mergeInsertOnly. Package-private so PlanSpec can assert the
-    * partition-pruned probe. */
-  private[store] def freshRows(name: String, incoming: DataFrame,
-                               keys: Seq[String]): DataFrame = {
-    val deduped = incoming.dropDuplicates(keys)
-    if (!hasData(name)) deduped
-    else {
-      // Partition-scope the probe. Contract: a row's partition value is
-      // a deterministic function of the row itself (Bronze: event_date
-      // derives from the event's own timestamp), so a replayed key can
-      // only collide inside the partitions the incoming batch touches.
-      val parts = metaOf(name).map(_.partitionBy).getOrElse(Nil)
-      val target =
-        if (parts.isEmpty) scan(name)
-        else touchedPartitionFilter(deduped, parts) match {
-          case Some(filter) => scan(name).where(filter)
-          case None         => scan(name)
-        }
-      // probe only the key columns of the target — column pruning
-      // keeps the anti-join build side narrow
-      val probe = target.select(keys.map(col): _*)
-      bloomBytes(name) match {
-        case Some(bytes) =>
-          // Bloom prefilter: rows whose key the sidecar has definitely
-          // never seen skip the anti-join entirely; only bloom hits
-          // (true dups + ~fpp false positives) probe the target. On a
-          // mostly-new micro-batch this shrinks the join's streamed
-          // side to ~nothing — the target KEY SCAN still executes, but
-          // the join work and exchange carry only the maybe-dups.
-          val mc = mightContainKeys(bytes, keys)
-          deduped.filter(!mc)
-            .unionByName(deduped.filter(mc).join(probe, keys, "left_anti"))
-        case None => deduped.join(probe, keys, "left_anti")
-      }
-    }
-  }
-
-  // ---- key Bloom index ------------------------------------------------
-  //
-  // A persistent Bloom filter over a table's merge keys, kept as a
-  // `_keybloom.bin` sidecar (same lifecycle as `_meta.json`). The
-  // invariant is one-directional: the filter is a SUPERSET of the keys
-  // ever merged — deletes and rollbacks only shrink the table, so a
-  // stale filter costs extra probing (false positives), never a missed
-  // duplicate. Built and updated with Spark's own codegen'd
-  // BloomFilterAggregate / BloomFilterMightContain (the runtime-filter
-  // machinery) over xxhash64 of the key columns — no UDF, no driver
-  // loop; the per-batch update aggregates only the freshly inserted
-  // rows and ORs it into the sidecar.
-
-  // shared JVM-wide (companion, keyed canonical-root::table): a second
-  // instance over the same root must see absorbed keys immediately —
-  // a per-instance cache goes stale after the other instance's merge
-  // and its "definitely fresh" path would insert silent duplicates.
-  // (Cross-process, the advisory file lock already enforces a single
-  // writer, and absorb-before-write closes the crash gap.)
-  private val bloomRootKey: String =
-    Paths.get(root).toAbsolutePath.normalize.toString
-  private def bkey(name: String): String = s"$bloomRootKey::$name"
-
-  /** Drop this root's JVM-global Bloom cache entries (configs +
-    * multi-MB payloads) — see [[LogTableStore.close]]: abandoned
-    * temp-dir roots would otherwise pin them for the JVM's lifetime.
-    * Safe anytime; a surviving instance re-reads the sidecar. */
-  def close(): Unit = ParquetTableStore.dropRoot(bloomRootKey)
-  private object bloomConf {
-    def put(name: String, v: (Long, Long)): Unit =
-      ParquetTableStore.bloomConfs.put(bkey(name), v)
-    def get(name: String): Option[(Long, Long)] =
-      ParquetTableStore.bloomConfs.get(bkey(name))
-    def contains(name: String): Boolean =
-      ParquetTableStore.bloomConfs.contains(bkey(name))
-  }
-  private object bloomCache {
-    def put(name: String, v: Array[Byte]): Unit =
-      ParquetTableStore.bloomCaches.put(bkey(name), v)
-    def get(name: String): Option[Array[Byte]] =
-      ParquetTableStore.bloomCaches.get(bkey(name))
-  }
-  private def bloomPath(name: String) =
-    Paths.get(path(name), "_keybloom.bin")
-
-  /** Opt a table into Bloom-prefiltered insert-only merges. Call once
-    * per (re)start, before merging; an existing sidecar is reused, else
-    * one is seeded from the current table contents. `expectedItems`
-    * sizes the filter for the table's lifetime key count at the given
-    * false-positive rate (default 1% at 10M keys ≈ 12 MB). */
-  def enableKeyBloom(name: String, keys: Seq[String],
-                     expectedItems: Long = 10000000L,
-                     fpp: Double = 0.01): Unit = {
-    val bits = KeyBloom.optimalBits(expectedItems, fpp)
-    bloomConf.put(name, (expectedItems, bits))
-    if (Files.exists(bloomPath(name)))
-      // preload the sidecar into the cache NOW: a later static-
-      // overwrite rewrite (compact, unpartitioned upsert/delete)
-      // deletes the whole table dir including the sidecar, and only a
-      // cached copy lets swapFromStaging restore it — an uncached wipe
-      // followed by bloomAbsorb would persist a delta-only filter and
-      // break the superset invariant (silently duplicating inserts)
-      bloomBytes(name)
-    else if (hasData(name))
-      aggBloom(scan(name), keys, expectedItems, bits)
-        .foreach(writeBloomFile(name, _))
-  }
-
-  // hash/aggregate/membership/OR primitives live in the shared
-  // [[KeyBloom]] object (LogTableStore prefilters with the same ones)
-  private def aggBloom(df: DataFrame, keys: Seq[String],
-                       items: Long, bits: Long): Option[Array[Byte]] =
-    KeyBloom.agg(df, keys, items, bits)
-
-  private def mightContainKeys(bloom: Array[Byte], keys: Seq[String]): Column =
-    KeyBloom.mightContain(bloom, keys)
-
-  private def bloomBytes(name: String): Option[Array[Byte]] = {
-    if (!bloomConf.contains(name)) return None
-    bloomCache.get(name).orElse {
-      val p = bloomPath(name)
-      if (!Files.exists(p)) None
-      else {
-        val b = Files.readAllBytes(p)
-        bloomCache.put(name, b)
-        Some(b)
-      }
-    }
-  }
-
-  private def writeBloomFile(name: String, bytes: Array[Byte]): Unit = {
-    Files.createDirectories(Paths.get(path(name)))
-    val tmp = Paths.get(path(name), s"._keybloom.${System.nanoTime()}.tmp")
-    Files.write(tmp, bytes)
-    Files.move(tmp, bloomPath(name), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    bloomCache.put(name, bytes)
-  }
-
-  /** OR the keys of `rows` into the sidecar (no-op when the table has
-    * no Bloom config). Aggregating only the delta keeps the update
-    * O(batch); merge compatibility holds because every filter is built
-    * with the same (items, bits). */
-  private def bloomAbsorb(name: String, rows: DataFrame,
-                          keys: Seq[String]): Unit =
-    bloomConf.get(name).foreach { case (items, bits) =>
-      aggBloom(rows, keys, items, bits).foreach { delta =>
-        val merged = bloomBytes(name) match {
-          case Some(old) => KeyBloom.or(old, delta)
-          case None      => delta
-        }
-        writeBloomFile(name, merged)
-      }
-    }
-
-  override def mergeInsertOnly(name: String, incoming: DataFrame,
-                               keys: Seq[String]): Long = withWriteLock(name) {
-    // Materialize before appending: the anti-join lineage reads the
-    // directory we are about to write into, and a cache can be evicted
-    // between count() and append(). localCheckpoint truncates the
-    // lineage eagerly (executor-local storage; on executor loss the
-    // batch fails and replays — never corrupts).
-    val persisted = freshRows(name, incoming, keys).localCheckpoint(true)
-    try {
-      val n = persisted.count()
-      if (n > 0) {
-        // absorb BEFORE the append: a crash in the gap then leaves the
-        // sidecar claiming keys the table doesn't hold — phantom keys
-        // only cost anti-join probes (superset invariant), while the
-        // reverse order could leave inserted keys missing from the
-        // filter, and a missing key is a future silent duplicate
-        bloomAbsorb(name, persisted, keys)
-        appendLocked(name, persisted)
-      }
-      n
-    } finally graft.SparkUtil.releaseCheckpoint(persisted)
-  }
-
-  /** Contract: the target must be unique on `keys` (guaranteed when
-    * all writes go through merge*). Iceberg's MERGE throws on multiple
-    * matching target rows; this emulation keeps the incoming row and
-    * collapses pre-existing duplicates within touched partitions. */
-  override def mergeUpsert(name: String, incoming: DataFrame,
-                           keys: Seq[String]): Unit = withWriteLock(name) {
-    if (!hasData(name)) {
-      val first = incoming.dropDuplicates(keys)
-      // absorb-before-write: see mergeInsertOnly — phantom keys are
-      // superset-safe, missing keys are not
-      bloomAbsorb(name, first, keys)
-      appendLocked(name, first)
-    } else mergeUpsertLocked(name, incoming, keys)
-  }
-
-  private def mergeUpsertLocked(name: String, incoming: DataFrame,
-                                keys: Seq[String]): Unit = {
-    // an empty upsert is a semantic no-op — without this, the staged
-    // merge of zero touched partitions has no footers to read back
-    // (streaming replays fold empty batches through here routinely)
-    if (incoming.isEmpty) return
-    val parts = metaOf(name).map(_.partitionBy).getOrElse(Nil)
-    val target = scan(name)
-    val cols = target.columns.toSeq
-    val pri = "__graft_priority"
-    val rn = "__graft_rn"
-    def union(t: DataFrame): DataFrame = t.withColumn(pri, lit(0))
-      .unionByName(incoming.select(cols.map(col): _*).withColumn(pri, lit(1)))
-    // rewrite only partitions the incoming batch touches — as a static
-    // filter so the target FILE SCAN prunes, not just the rows
-    val scoped =
-      if (parts.isEmpty) union(target)
-      else touchedPartitionFilter(incoming, parts) match {
-        case Some(filter) => union(target.where(filter))
-        case None => // backfill-wide batch: semi-join scoping instead
-          val touched = incoming.select(parts.map(col): _*).distinct()
-          union(target).join(broadcast(touched), parts, "left_semi")
-      }
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(pri).desc)
-    val merged = scoped.withColumn(rn, row_number().over(w))
-      .filter(col(rn) === 1).drop(pri, rn)
-    // upserted keys enter the sidecar so the superset invariant holds
-    // for tables that mix merge styles — absorbed BEFORE the rewrite
-    // (crash-gap rule: phantom keys are superset-safe, missing keys
-    // are not); a static-overwrite swap re-persists the cached filter
-    bloomAbsorb(name, incoming, keys)
-    rewrite(name, merged, parts, dynamicOverwrite = parts.nonEmpty)
-  }
-
-  override def delete(name: String, predicate: Column): Long =
-    if (!hasData(name)) 0L else withWriteLock(name) { deleteLocked(name, predicate) }
-
-  private def deleteLocked(name: String, predicate: Column): Long = {
-    val parts = metaOf(name).map(_.partitionBy).getOrElse(Nil)
-    val pred = coalesce(predicate, lit(false))
-    // Partition-scope the rewrite: only partitions that actually
-    // contain matching rows are re-staged (one pruned-column scan to
-    // find them), so delete cost is O(touched partitions) like
-    // mergeUpsert — not a full-table rewrite. Predicate columns that
-    // are partition columns prune this probe scan too.
-    val touched: Option[Array[org.apache.spark.sql.Row]] =
-      if (parts.isEmpty) None
-      else {
-        val t = scan(name).filter(pred)
-          .select(parts.map(col): _*).distinct()
-          .limit(MaxProbePartitions + 1).collect()
-        if (t.length > MaxProbePartitions) None else Some(t)
-      }
-    if (touched.exists(_.isEmpty)) return 0L // no partition holds a match
-    val scoped = touched.isDefined
-    val filter = touched match {
-      case Some(rows) => rows.toSeq.map { r =>
-        parts.zipWithIndex.map { case (p, i) => col(p) <=> lit(r.get(i)) }
-          .reduce(_ && _)
-      }.reduce(_ || _)
-      case None => lit(true) // non-partitioned, or backfill-wide: full rewrite
-    }
-    // Single pass over the touched partitions: the removed-row count
-    // rides the staging write as an observed metric instead of two
-    // extra count() actions.
-    val obs = Observation(s"graft_delete_${System.nanoTime()}")
-    val keep = scan(name).where(filter)
-      .observe(obs,
-        coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).as("removed"))
-      .filter(!pred)
-    val staging = stage(name, keep, parts)
-    try {
-      // Observed metrics ride the listener bus; under heavy concurrent
-      // load delivery can fail. Fall back to two metadata-only parquet
-      // counts (target is still untouched at this point) — same value,
-      // two cheap footer reads instead of zero.
-      val removed =
-        try obs.get("removed").asInstanceOf[Long]
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            // an all-rows-deleted staging dir has no data files to read
-            val staged = scala.util.Try(
-              spark.read.format(format).load(staging).count()).getOrElse(0L)
-            scan(name).where(filter).count() - staged
-        }
-      if (removed > 0)
-        swapDeletedScope(name, staging, parts, touched, scoped)
-      removed
-    } finally deleteRecursively(Paths.get(staging))
-  }
-
-  /** Swap a delete's staged survivors over the rewritten scope —
-    * shared by the predicate and keyed delete paths. */
-  private def swapDeletedScope(name: String, staging: String,
-                               parts: Seq[String],
-                               touched: Option[Array[org.apache.spark.sql.Row]],
-                               scoped: Boolean): Unit = {
-    // A delete that empties EVERY row in scope stages no data files;
-    // reading the staging dir back would fail schema inference, and
-    // there is nothing to write anyway — just drop the scope.
-    val stagedHasData = {
-      val stream = Files.walk(Paths.get(staging))
-      try stream.anyMatch { f =>
-        val n = f.getFileName.toString
-        Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
-      } finally stream.close()
-    }
-    if (stagedHasData)
-      swapFromStaging(name, staging, parts, dynamicOverwrite = scoped)
-    else if (!scoped) {
-      // full-rewrite scope emptied: clear all data, keep _meta.json
-      val stream = Files.list(Paths.get(path(name)))
-      val children = try stream.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        finally stream.close()
-      children.filterNot(_.getFileName.toString == "_meta.json")
-        .foreach(deleteRecursively)
-    }
-    // dynamic overwrite only replaces partitions PRESENT in the
-    // staged result — a partition whose every row was deleted
-    // stages nothing and would survive; drop it explicitly
-    if (scoped) touched.get.foreach { r =>
-      val rel = parts.zipWithIndex.map { case (p, i) =>
-        s"$p=${partitionDirValue(r.get(i))}" }.mkString("/")
-      if (!Files.exists(Paths.get(staging, rel)))
-        deleteRecursively(Paths.get(path(name), rel))
-    }
-  }
-
-  /** Keyed delete — [[delete]]'s partition-scoped COW rewrite with a
-    * left-anti join against a DISTRIBUTED key frame (never collected;
-    * the delete set may be a retention sweep, not a literal list).
-    * Only partitions actually holding a matching key are rewritten;
-    * the probe collects partition VALUES, capped like [[delete]]'s. */
-  override def deleteKeys(name: String, keysDf: DataFrame,
-                          keyCols: Seq[String]): Long =
-    if (!hasData(name)) 0L else withWriteLock(name) {
-      val parts = metaOf(name).map(_.partitionBy).getOrElse(Nil)
-      val keysD = keysDf.select(keyCols.map(col): _*)
-        .dropDuplicates(keyCols)
-        .localCheckpoint(true) // reused: match probe + anti-join
-      try {
-        if (keysD.isEmpty) return 0L
-        // ONE semi-join probe job answers every planning question
-        // (r18, VERDICT r17 #5 — this path previously paid three:
-        // a match-existence/touched-partition probe plus staged and
-        // inScope counts after the rewrite). Per-partition MATCH
-        // COUNTS over the semi-join: their sum is exactly the rows
-        // the anti-join below removes (every matched row drops, every
-        // other row stages), and the group keys are the touched
-        // partitions. The write lock is held throughout, so the
-        // counts measured here stay true through the swap.
-        val matched = scan(name).join(keysD, keyCols, "left_semi")
-        val grouped: Array[org.apache.spark.sql.Row] =
-          if (parts.isEmpty) matched.agg(count(lit(1))).collect()
-          else matched.groupBy(parts.map(col): _*)
-            .agg(count(lit(1)))
-            .limit(MaxProbePartitions + 1).collect()
-        // backfill-wide batch (over the partition cap): full rewrite,
-        // and the capped probe undercounts — re-measure below
-        val overCap = parts.nonEmpty && grouped.length > MaxProbePartitions
-        val removedPlanned: Option[Long] =
-          if (overCap) None
-          else Some(grouped.map(_.getLong(parts.length)).sum)
-        if (removedPlanned.contains(0L)) return 0L
-        val touched: Option[Array[org.apache.spark.sql.Row]] =
-          if (parts.isEmpty || overCap) None
-          else Some(grouped.map(r => org.apache.spark.sql.Row.fromSeq(
-            (0 until parts.length).map(r.get))))
-        val scoped = touched.isDefined
-        val filter = touched match {
-          case Some(rows) => rows.toSeq.map { r =>
-            parts.zipWithIndex.map { case (p, i) => col(p) <=> lit(r.get(i)) }
-              .reduce(_ && _)
-          }.reduce(_ || _)
-          case None => lit(true)
-        }
-        val inScope = scan(name).where(filter)
-        val keep = inScope.join(keysD, keyCols, "left_anti")
-        val staging = stage(name, keep, parts)
-        try {
-          val removed = removedPlanned.getOrElse {
-            // over-cap fallback: the pre-r18 two-count measurement
-            val staged = scala.util.Try(
-              spark.read.format(format).load(staging).count()).getOrElse(0L)
-            inScope.count() - staged
-          }
-          if (removed > 0)
-            swapDeletedScope(name, staging, parts, touched, scoped)
-          removed
-        } finally deleteRecursively(Paths.get(staging))
-      } finally graft.SparkUtil.releaseCheckpoint(keysD)
-    }
-
-  /** Partition directory naming EXACTLY as Spark's Hive-style writer
-    * produces it — delegate to the same
-    * `ExternalCatalogUtils.escapePathName` the file writer uses, so the
-    * emptied-partition cleanup in [[delete]] reconstructs the real
-    * directory name for any partition value (the writer leaves space,
-    * comma, '+' etc. literal and only escapes its fixed reserved set;
-    * a home-grown superset escape would miss the directory and leave
-    * stale rows behind). Null AND empty-string values both land in the
-    * default partition, matching `getPartitionPathString`. */
-  private def partitionDirValue(v: Any): String = {
-    val s = if (v == null) null else v.toString
-    if (s == null || s.isEmpty)
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .DEFAULT_PARTITION_NAME
-    else
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(s)
-  }
-
-  /** Operational compaction: streaming ingestion appends one small
-    * file per micro-batch per partition; compaction rewrites the table
-    * into ~targetBytes files (the reference delegates this to Iceberg's
-    * 256 MB write targets + metadata GC, bronze_streaming_job.py:365-369).
-    * Returns (filesBefore, filesAfter).
-    */
-  def compact(name: String, targetBytes: Long = 128L * 1024 * 1024): (Long, Long) =
-    compact(name, targetBytes, Nil)
-
-  /** Compaction with data clustering: `clusterBy` sorts rows within
-    * each output file so parquet row-group min/max statistics become
-    * selective for those columns — the single-dimension analogue of
-    * OPTIMIZE ... ZORDER BY. A point/range predicate on a clustered
-    * column then skips whole row groups at scan time instead of
-    * reading every file in the partition. */
-  def compact(name: String, targetBytes: Long,
-              clusterBy: Seq[String]): (Long, Long) =
-    compactWith(name, targetBytes, (df, n, parts) =>
-      if (clusterBy.isEmpty) {
-        if (parts.nonEmpty) df.repartition(n, parts.map(col): _*)
-        else df.repartition(n)
-      } else {
-        // range-partition on the cluster key so files hold DISJOINT key
-        // ranges (a hash repartition would scatter every key range
-        // across every file, leaving min/max stats useless), then sort
-        // within each file for row-group selectivity
-        df.repartitionByRange(n, (parts ++ clusterBy).map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      })
-
-  /** Multi-dimension clustered compaction: files hold disjoint ranges
-    * of the Morton interleave of two dimensions
-    * ([[graft.functions.ZOrderExpression]]), rows sorted by it within
-    * each file — `OPTIMIZE ... ZORDER BY (a, b)`. A lexicographic sort
-    * leaves the trailing column spanning its full range in every file;
-    * the Z-curve bounds BOTH columns' min/max stats per file, so
-    * predicates on either dimension skip files/row groups. */
-  def compactZOrder(name: String, targetBytes: Long,
-                    dimA: String, dimB: String): (Long, Long) =
-    compactWith(name, targetBytes, (df, n, parts) => {
-      val z = graft.functions.ZOrderExpression.zOrder2(col(dimA), col(dimB))
-      df.repartitionByRange(n, (parts.map(col) :+ z): _*)
-        .sortWithinPartitions(z)
-    })
-
-  private def compactWith(name: String, targetBytes: Long,
-                          pack: (DataFrame, Int, Seq[String]) => DataFrame,
-                          lenient: Boolean = false)
-      : (Long, Long) = {
-    if (!hasData(name)) return (0L, 0L)
-    withWriteLock(name) {
-      val parts = metaOf(name).map(_.partitionBy).getOrElse(Nil)
-      def stats(): (Long, Long) = {
-        val stream = Files.walk(Paths.get(path(name)))
-        try {
-          val suffix = if (format == "parquet") ".parquet" else s".$format"
-          val files = stream.filter(f => f.toString.endsWith(suffix))
-            .toArray.map(_.asInstanceOf[java.nio.file.Path])
-          (files.length.toLong, files.map(Files.size).sum)
-        } finally stream.close()
-      }
-      val (before, bytes) = stats()
-      val nFiles = math.max(1, (bytes / targetBytes).toInt +
-        (if (bytes % targetBytes > 0) 1 else 0))
-      // The packing must run on the SECOND write (staging → target):
-      // the swap re-reads staging with file bin-packing, which would
-      // destroy any row ordering applied before staging.
-      val source = if (lenient) scanLenient(name) else scan(name)
-      rewrite(name, source, parts, dynamicOverwrite = false,
-        transform = df => pack(df, nFiles, parts))
-      try syncZoneSidecar(name) // re-learn the compacted files' zones
-      catch { case scala.util.control.NonFatal(_) => () }
-      (before, stats()._1)
-    }
-  }
-
-  /** Repair compaction: rewrite the table from its SURVIVING rows,
-    * skipping unreadable data files (the [[scanLenient]] pairing —
-    * a strict compact of a corrupt table fails with the same exception
-    * the lenient scan exists to bypass). Explicitly lossy: rows in
-    * corrupt files are dropped by the rewrite. */
-  def compactRepair(name: String,
-                    targetBytes: Long = 128L * 1024 * 1024): (Long, Long) =
-    compactWith(name, targetBytes, (df, n, parts) =>
-      if (parts.nonEmpty) df.repartition(n, parts.map(col): _*)
-      else df.repartition(n),
-      lenient = true)
-
-  /** Write-temp-then-swap: parquet has no transactions, so materialize
-    * the merged result in a staging dir before overwriting the target
-    * (reading and overwriting the same path in one plan corrupts it).
-    */
-  private def stage(name: String, df: DataFrame, parts: Seq[String]): String = {
-    val staging = s"$root/__staging__/${name.replace('.', '_')}_${System.nanoTime()}"
-    val w0 = df.write.mode(SaveMode.Overwrite)
-    (if (parts.nonEmpty) w0.partitionBy(parts: _*) else w0)
-      .format(format).save(staging)
-    staging
-  }
-
-  private def swapFromStaging(name: String, staging: String, parts: Seq[String],
-                              dynamicOverwrite: Boolean,
-                              transform: DataFrame => DataFrame = identity,
-                              knownSchema: Option[StructType] = None): Unit = {
-    val reader = spark.read.format(format)
-    val back = transform(
-      knownSchema.fold(reader)(reader.schema).load(staging))
-    val w1 = back.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode",
-        if (dynamicOverwrite) "dynamic" else "static")
-    (if (parts.nonEmpty) w1.partitionBy(parts: _*) else w1)
-      .format(format).save(path(name))
-    // a STATIC overwrite replaced the whole table dir, taking the
-    // `_keybloom.bin` sidecar with it — re-persist the cached filter so
-    // the superset invariant survives rewrites (rewrites never add
-    // keys, so the cached filter stays a superset)
-    bloomCache.get(name)
-      .filter(_ => !Files.exists(bloomPath(name)))
-      .foreach(writeBloomFile(name, _))
-  }
-
-  /** Export a table as fixed-size training shards — the hand-off step
-    * of a training-data pipeline: `recordsPerShard` rows per file
-    * (enforced by maxRecordsPerFile even under partition skew),
-    * shard count sized from the actual row count. With `orderBy` the
-    * data is range-partitioned and sorted, so shard membership is a
-    * deterministic function of the data (reproducible shards across
-    * runs and cluster sizes); without it, shards are balanced but
-    * arbitrary. `format` "json" gives JSONL (one record per line, the
-    * lingua franca of training corpora), "parquet" keeps types exact.
-    * Returns the shard-file count. */
-  def exportShards(name: String, outDir: String, recordsPerShard: Long,
-                   outFormat: String = "json",
-                   orderBy: Seq[String] = Nil): Long = {
-    require(recordsPerShard > 0, "recordsPerShard must be positive")
-    val df0 = scan(name)
-    val n = df0.count()
-    val shards = math.max(1L, (n + recordsPerShard - 1) / recordsPerShard).toInt
-    val df =
-      if (orderBy.nonEmpty)
-        df0.repartitionByRange(shards, orderBy.map(col): _*)
-          .sortWithinPartitions(orderBy.map(col): _*)
-      else df0.repartition(shards)
-    df.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", recordsPerShard)
-      .format(outFormat).save(outDir)
-    val stream = Files.list(Paths.get(outDir))
-    try stream.filter { p =>
-      val f = p.getFileName.toString
-      !f.startsWith("_") && !f.startsWith(".")
-    }.count()
-    finally stream.close()
-  }
-
-  /** Per-data-file statistics from parquet FOOTERS — row count, size,
-    * and per-column min/max — without reading a single data page: the
-    * metadata Iceberg keeps in manifests, surfaced for plain parquet.
-    * This is the audit tool for clustering decisions: after
-    * `compact(clusterBy = ...)` / `compactZOrder`, per-file min/max
-    * spans on the clustered columns should be narrow (that narrowness
-    * IS what scan-time file/row-group skipping exploits), and a file
-    * whose span covers the whole domain is a compaction candidate.
-    * Footer reads are O(files) driver-side metadata fetches (the same
-    * cost class as Spark's own scan planning); a cluster deployment
-    * lists from the Hadoop FileSystem API like the rest of this class.
-    * Returns (file, rows, bytes, column, min_value, max_value) with
-    * min/max rendered as strings (NULL when the footer has no stats
-    * for that column).
-    */
-  def fileStats(name: String, cols: Seq[String]): DataFrame = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.hadoop.fs.Path
-    require(format == "parquet", s"fileStats reads parquet footers, not $format")
-    // committed data files only — hidden/staging partials would add
-    // phantom rows (and can have half-written footers)
-    val files: Seq[java.nio.file.Path] = dataFiles(name)
-    val conf = spark.sessionState.newHadoopConf()
-    val rows = files.flatMap { f =>
-      val reader = ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(f.toUri), conf))
-      val footer = try reader.getFooter finally reader.close()
-      val blocks = footer.getBlocks
-      import scala.jdk.CollectionConverters._
-      val nRows = blocks.asScala.map(_.getRowCount).sum
-      val bytes = Files.size(f)
-      cols.map { c =>
-        // min/max over the file = min/max over its row groups
-        val stats = blocks.asScala.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == c)
-          .map(_.getStatistics)
-          .filter(s => s != null && s.hasNonNullValue)
-        val minV =
-          if (stats.isEmpty) null
-          else stats.minBy(_.genericGetMin.asInstanceOf[Comparable[Any]])
-            .minAsString()
-        val maxV =
-          if (stats.isEmpty) null
-          else stats.maxBy(_.genericGetMax.asInstanceOf[Comparable[Any]])
-            .maxAsString()
-        (f.toString, nRows, bytes, c, minV, maxV)
-      }
-    }
-    import spark.implicits._
-    rows.toDF("file", "rows", "bytes", "column", "min_value", "max_value")
-  }
-
-  /** Remove orphaned staging directories left behind by crashed
-    * rewrites (every completed rewrite deletes its own staging in a
-    * finally). The age gate protects a concurrent rewrite's LIVE
-    * staging dir — only entries untouched for `olderThanMs` are
-    * garbage by construction. Returns the removed paths — the
-    * maintenance twin of Iceberg's remove_orphan_files. */
-  def vacuumStaging(olderThanMs: Long = 3600000L): Seq[String] = {
-    val dir = Paths.get(s"$root/__staging__")
-    if (!Files.exists(dir)) return Nil
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val stream = Files.list(dir)
-    val victims =
-      try stream.filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-        .toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
-      finally stream.close()
-    victims.foreach(deleteRecursively)
-    victims.map(_.toString)
-  }
-
-  private def rewrite(name: String, df: DataFrame, parts: Seq[String],
-                      dynamicOverwrite: Boolean,
-                      transform: DataFrame => DataFrame = identity): Unit = {
-    val staging = stage(name, df, parts)
-    try swapFromStaging(name, staging, parts, dynamicOverwrite, transform,
-      // the staged frame's own schema: an all-rows-empty staging dir
-      // has no footers to infer from (UNABLE_TO_INFER_SCHEMA), and the
-      // empty read-back must still carry the right columns so the
-      // overwrite below is a typed no-op (dynamic) or a typed clear
-      // (static) instead of a crash
-      knownSchema = Some(df.schema))
-    finally deleteRecursively(Paths.get(staging))
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally stream.close()
-    }
-  }
-}
-
-/** Same-JVM shared Bloom-sidecar state for all [[ParquetTableStore]]
-  * instances, keyed by canonical root::table — see the note at the
-  * instance accessors. */
-private[store] object ParquetTableStore {
-  import scala.collection.concurrent.TrieMap
-  private[store] val bloomConfs = TrieMap.empty[String, (Long, Long)]
-  private[store] val bloomCaches = TrieMap.empty[String, Array[Byte]]
-  // (rootKey::table) -> (sidecar byte size, full-precision mtime,
-  // parsed zones) — the per-query sidecar-parse memo (loadZoneSidecar).
-  // FileTime, not toMillis: a same-size rewrite landing in the same
-  // millisecond (or a coarse-mtime filesystem) must not be served
-  // stale — nanosecond mtimes (every modern Linux FS) discriminate it.
-  private[store] val zoneSidecars = TrieMap.empty[String,
-    (Long, java.nio.file.attribute.FileTime,
-      Map[String, Map[String, ZoneEntry]])]
-
-  private[store] def dropRoot(rootKey: String): Unit = {
-    val prefix = rootKey + "::"
-    bloomConfs.keySet.filter(_.startsWith(prefix)).foreach(bloomConfs.remove)
-    bloomCaches.keySet.filter(_.startsWith(prefix)).foreach(bloomCaches.remove)
-    zoneSidecars.keySet.filter(_.startsWith(prefix))
-      .foreach(zoneSidecars.remove)
-  }
-
-  /** Test hook: live companion-cache entries under a root. */
-  private[store] def cacheEntryCount(rootKey: String): Int = {
-    val prefix = rootKey + "::"
-    bloomConfs.keySet.count(_.startsWith(prefix)) +
-      bloomCaches.keySet.count(_.startsWith(prefix)) +
-      zoneSidecars.keySet.count(_.startsWith(prefix))
-  }
+  def smallFileCount(name: String, targetBytes: Long): Int
 }

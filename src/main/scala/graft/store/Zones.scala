@@ -11,10 +11,10 @@ private[store] final case class ZoneEntry(minS: Option[String],
                                           maxS: Option[String],
                                           allNull: Boolean)
 
-/** Zone-map primitives shared by [[ParquetTableStore]] (sidecar-cached
-  * footer zones) and [[LogTableStore]] (zones carried in the commit
-  * manifest). One implementation so the two stores can never drift on
-  * the all-null/unknown proofs or the string-render round-trip rules.
+/** Zone-map primitives behind [[LogTableStore]]'s manifest zones
+  * (read from each data file's footer once, at commit time, and
+  * carried in the commit log) and [[ZonePredicate]]'s literal parsing:
+  * the all-null/unknown proofs and the string-render round-trip rules.
   */
 private[store] object Zones {
 
@@ -62,14 +62,6 @@ private[store] object Zones {
     case StringType => v.asInstanceOf[String]
     case _          => v.toString // Long/Int/Double/Float round-trip exactly
   }
-
-  /** True iff a file whose zone for `dt` is [mn, mx] can hold a row in
-    * [start, end] (inclusive); an all-null zone cannot satisfy any
-    * range, and callers treat unknown zones as "keep" before calling. */
-  def intersects(dt: DataType, mn: String, mx: String,
-                 start: String, end: String): Boolean =
-    cmp(dt, parse(dt, mx), parse(dt, start)) >= 0 &&
-      cmp(dt, parse(dt, mn), parse(dt, end)) <= 0
 
   /** Footer → (row count, per-column zones) for one file. A chunk
     * whose statistics carry no min/max is treated as all-null ONLY

@@ -31,20 +31,18 @@ class DocumentIngest(store: TableStore,
     * source string, ingest_ts timestamp). */
   def start(source: DataFrame): StreamingQuery = {
     // Partitioned by digest_bucket (a prefix of the merge key), NOT by
-    // source: freshRows prunes the anti-join probe to partitions present
-    // in the incoming batch, which is only sound when the partition value
-    // is implied by the merge key. A `source` partition would let the
-    // same text arriving later from a different feed probe the wrong
-    // partition and insert a duplicate digest. The 256 hex buckets also
-    // spread ingest writes evenly regardless of feed skew.
+    // source: each written file then holds one bucket, so its
+    // text_digest zone is narrow and the merge's anti-join probe prunes
+    // to the files whose key window the batch can hit. A `source`
+    // partition would scatter one digest range over every feed's files.
+    // The 256 hex buckets also spread ingest writes evenly regardless of
+    // feed skew.
     store.ensure(table, IngestedSchema, Seq("digest_bucket"))
     // Bloom-prefiltered merge: at scale most micro-batch digests are
     // genuinely new, so the sidecar filter lets the anti-join probe
     // carry only bloom hits (true replays + ~1% false positives)
     // instead of the whole batch
     store match {
-      case p: graft.store.ParquetTableStore =>
-        p.enableKeyBloom(table, Seq("text_digest"))
       case l: graft.store.LogTableStore =>
         l.enableKeyBloom(table, Seq("text_digest"))
       case _ => ()
@@ -99,7 +97,7 @@ object DocumentIngest {
         .as("n_tokens"),
       TextFunctions.qualityScore(col("text")).as("quality_score"),
       TextFunctions.langIdArgmax(col("text")).as("predicted_lang"),
-      // partition column: first digest byte — deterministic from the
-      // merge key, so partition-scoped merge probes stay correct
+      // partition column: first digest byte — a prefix of the merge
+      // key, so each bucket's files cover one narrow digest range
       substring(md5(col("text")), 1, 2).as("digest_bucket"))
 }

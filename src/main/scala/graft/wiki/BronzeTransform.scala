@@ -1,6 +1,6 @@
 package graft.wiki
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Settings
 
@@ -19,6 +19,19 @@ object BronzeTransform {
 
   val WatermarkDelay = "10 minutes"
 
+  /** The envelope parse both outputs route on. */
+  private def parseEnvelope(value: Column): Column =
+    from_json(value.cast("string"), WikiSchemas.KafkaValueSchema)
+
+  /** The ONE routing predicate: an envelope is dead-lettered iff it
+    * fails the declared-schema parse or carries no data payload.
+    * [[dlq]] keeps exactly these rows and [[apply]] drops exactly
+    * these, so every envelope lands in one of the two outputs, never
+    * both (PERMISSIVE from_json yields an all-null struct, not a null,
+    * for garbage input — its `data` is null, so it routes here too). */
+  private def deadLetter(envelope: Column): Column =
+    envelope.isNull || envelope("data").isNull
+
   /** S3: dead-letter routing — records whose envelope fails the
     * declared-schema parse (or carries no data payload) become DLQ rows
     * (producer/kafka_producer.py:380-389; table schema
@@ -27,15 +40,13 @@ object BronzeTransform {
     * filtered sinks, not a re-read.
     */
   def dlq(df: DataFrame, clock: Clock = Clock.system): DataFrame = {
-    val parsed = df.withColumn("__parsed",
-      from_json(col("value").cast("string"), WikiSchemas.KafkaValueSchema))
-    // PERMISSIVE from_json yields an all-null struct (not a null) for
-    // garbage input — classify by whether ANY field survived the parse
+    val parsed = df.withColumn("__parsed", parseEnvelope(col("value")))
+    // classify by whether ANY field survived the parse
     val unparseable = col("__parsed").isNull ||
       (col("__parsed.id").isNull && col("__parsed.data").isNull &&
         col("__parsed._processing").isNull)
     parsed
-      .filter(col("__parsed").isNull || col("__parsed.data").isNull)
+      .filter(deadLetter(col("__parsed")))
       .select(
         col("value").cast("string").as("raw_value"),
         when(unparseable, "unparseable_envelope")
@@ -58,8 +69,8 @@ object BronzeTransform {
         col("partition").as("kafka_partition"),
         col("offset").as("kafka_offset"),
         col("timestamp").as("kafka_timestamp"),
-        from_json(col("value").cast("string"), WikiSchemas.KafkaValueSchema)
-          .as("parsed"))
+        parseEnvelope(col("value")).as("parsed"))
+        .filter(!deadLetter(col("parsed")))
       if (useState) parsed.withWatermark("kafka_timestamp", WatermarkDelay)
       else parsed
     }

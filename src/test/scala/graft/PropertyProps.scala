@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.apache.spark.sql.functions._
 import graft.llmdata.{DedupFunctions, TextFunctions}
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.wiki.{Clock, GoldTransforms}
 
 /** Property tests (SURVEY §5.3): the invariants that are theorems of
@@ -69,7 +69,7 @@ object PropertyProps extends Properties("graft") {
     Prop.forAll(Gen.nonEmptyListOf(Gen.choose(0, 50))) { keys =>
       val s = sp
       import s.implicits._
-      val store = new ParquetTableStore(s,
+      val store = new LogTableStore(s,
         java.nio.file.Files.createTempDirectory("prop").toString)
       val df = keys.map(k => (k.toLong, s"v$k")).toDF("id", "v")
       store.ensure("p.t", df.schema, Nil)
@@ -79,28 +79,61 @@ object PropertyProps extends Properties("graft") {
         store.scan("p.t").count() == keys.distinct.size.toLong
     }
 
+  /** Reference model of a keyed table for the store differentials: a
+    * `Map[key, row]` folded over the same ops the store commits, rows
+    * as column -> value, so content compares exactly — what MERGE
+    * INTO / DELETE FROM mean on a key-unique table, with no storage
+    * underneath. `evolve` adds a column the existing rows read as NULL. */
+  private final class KeyedModel(base: Seq[String]) {
+    private var cols = base
+    private var rows = Map.empty[Long, Map[String, Any]]
+    def insert(batch: Seq[Map[String, Any]]): Long = {
+      val fresh = batch.filterNot(r => rows.contains(key(r)))
+      rows ++= fresh.map(r => key(r) -> r); fresh.size.toLong
+    }
+    def upsert(batch: Seq[Map[String, Any]]): Unit =
+      rows ++= batch.map(r => key(r) -> r)
+    def delete(p: Long => Boolean): Long = {
+      val gone = rows.keySet.filter(p)
+      rows --= gone; gone.size.toLong
+    }
+    def evolve(c: String): Unit = cols = cols :+ c
+    /** Columns sorted, each row rendered in that order. */
+    def content: (Seq[String], Seq[String]) = {
+      val sorted = cols.sorted
+      (sorted, rows.values.map(r => sorted.map(c =>
+        String.valueOf(r.getOrElse(c, null))).mkString("|")).toSeq.sorted)
+    }
+    private def key(r: Map[String, Any]): Long = r("id").asInstanceOf[Long]
+  }
+
+  /** Same rendering as [[KeyedModel.content]], read from a store. */
+  private def storeContent(st: graft.store.TableStore, name: String) = {
+    val df = st.scan(name)
+    val cols = df.columns.sorted.toSeq
+    (cols, df.select(cols.map(col): _*).collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+  }
+
   property("TableStore backends agree: random op sequences end in identical content") =
     {
-      // differential test: the parquet-emulation store and the
-      // transactional log store implement the same TableStore trait —
-      // any op sequence must leave bit-identical table content (the
-      // log store's COW pruning/delta resolution may skip or rewrite
-      // different FILES, but never different ROWS)
+      // differential test against the reference model: the log store's
+      // COW pruning, Bloom/zone probes and delta resolution may skip or
+      // rewrite different FILES per op, but any op sequence must leave
+      // exactly the model's ROWS, and every op must report the model's
+      // inserted/removed counts.
       // op mix keeps the table KEY-UNIQUE (inserts/upserts/deletes):
       // MERGE on a duplicate-key target is undefined in any real
-      // engine (Iceberg/Delta error on multiple matches), and the two
-      // backends legitimately differ there (window-dedup collapses
-      // dups, COW anti-join preserves untargeted ones)
+      // engine (Iceberg/Delta error on multiple matches)
       sealed trait Op
       case class Insert(ks: List[Int]) extends Op
       case class Upsert(ks: List[Int]) extends Op
       case class Delete(m: Int) extends Op
       // keyed delete: the CDC-replica delete path — a DISTRIBUTED key
-      // frame anti-joined by both backends' COW rewrites
+      // frame anti-joined by the COW rewrite
       case class DeleteKeys(ks: List[Int]) extends Op
-      // schema evolution interleaved with writes: both backends must
-      // resolve old-shape batches and evolved scans identically
-      // (missing-leaf nulls), whatever point in the sequence the
+      // schema evolution interleaved with writes: old-shape rows must
+      // read back null-filled, whatever point in the sequence the
       // column appeared at
       case object Evolve extends Op
       val keysGen = Gen.nonEmptyListOf(Gen.choose(0, 30)).map(_.distinct)
@@ -109,27 +142,33 @@ object PropertyProps extends Properties("graft") {
         keysGen.map(Upsert(_)), Gen.choose(2, 5).map(Delete(_)),
         keysGen.map(DeleteKeys(_)),
         Gen.const(Evolve))
-      // partitioned on alternate runs: exercises the parquet store's
-      // partition-scoped probes/dynamic overwrite against the log
-      // store's zone-clustered staging on the same op sequences
+      // partitioned on alternate runs: zone-clustered staging per
+      // partition value against one unpartitioned file set
       Prop.forAll(Gen.listOfN(4, opGen), Gen.oneOf(false, true)) {
         (ops, partitioned) =>
         val s = sp
         import s.implicits._
-        val a = new ParquetTableStore(s,
-          java.nio.file.Files.createTempDirectory("eqp").toString)
-        val b = new graft.store.LogTableStore(s,
+        val store = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("eql").toString)
+        val model = new KeyedModel(Seq("id", "v", "part"))
         val schema = Seq((0L, "x", 0L)).toDF("id", "v", "part").schema
-        val parts = if (partitioned) Seq("part") else Nil
-        a.ensure("p.eq", schema, parts); b.ensure("p.eq", schema, parts)
-        // batches must carry the CURRENT schema (both backends follow
-        // the Delta-without-mergeSchema contract: post-evolution
-        // writes include the evolved columns); values derive from the
-        // row so evolved-column propagation through upsert rewrites
-        // and COW deletes is differentially checked too
+        store.ensure("p.eq", schema, if (partitioned) Seq("part") else Nil)
+        // batches must carry the CURRENT schema (the
+        // Delta-without-mergeSchema contract: post-evolution writes
+        // include the evolved columns); values derive from the row so
+        // evolved-column propagation through upsert rewrites and COW
+        // deletes is checked too
         var extras = List.empty[String]
+        // both sides always run (no short-circuit), so a count mismatch
+        // cannot desynchronize the rest of the sequence
+        var ok = true
+        def agree(got: Long, want: Long): Unit = ok = ok && got == want
         ops.zipWithIndex.foreach { case (op, i) =>
+          def rows(ks: List[Int], tag: String) = ks.map { k =>
+            Map[String, Any]("id" -> k.toLong, "v" -> s"$tag$k-$i",
+              "part" -> (k % 3).toLong) ++
+              extras.map(n => n -> (k.toLong + n.drop(1).toLong))
+          }
           def df(ks: List[Int], tag: String) = {
             val base = ks.map(k => (k.toLong, s"$tag$k-$i", (k % 3).toLong))
               .toDF("id", "v", "part")
@@ -138,99 +177,88 @@ object PropertyProps extends Properties("graft") {
           }
           op match {
             case Insert(ks) =>
-              a.mergeInsertOnly("p.eq", df(ks, "n"), Seq("id"))
-              b.mergeInsertOnly("p.eq", df(ks, "n"), Seq("id"))
+              agree(store.mergeInsertOnly("p.eq", df(ks, "n"), Seq("id")),
+                model.insert(rows(ks, "n")))
             case Upsert(ks) =>
-              a.mergeUpsert("p.eq", df(ks, "u"), Seq("id"))
-              b.mergeUpsert("p.eq", df(ks, "u"), Seq("id"))
+              store.mergeUpsert("p.eq", df(ks, "u"), Seq("id"))
+              model.upsert(rows(ks, "u"))
             case Delete(m) =>
-              a.delete("p.eq", col("id") % m === 0)
-              b.delete("p.eq", col("id") % m === 0)
+              agree(store.delete("p.eq", col("id") % m === 0),
+                model.delete(_ % m == 0))
             case DeleteKeys(ks) =>
-              def kdf() = ks.map(_.toLong).toDF("id")
-              val ra = a.deleteKeys("p.eq", kdf(), Seq("id"))
-              val rb = b.deleteKeys("p.eq", kdf(), Seq("id"))
-              assert(ra == rb,
-                s"keyed delete removed $ra (parquet) vs $rb (log) rows")
+              agree(store.deleteKeys("p.eq", ks.map(_.toLong).toDF("id"),
+                Seq("id")), model.delete(ks.map(_.toLong).toSet))
             case Evolve =>
-              val f = org.apache.spark.sql.types.StructField(
-                s"e$i", org.apache.spark.sql.types.LongType, nullable = true)
-              a.addColumn("p.eq", f); b.addColumn("p.eq", f)
+              store.addColumn("p.eq", org.apache.spark.sql.types.StructField(
+                s"e$i", org.apache.spark.sql.types.LongType, nullable = true))
+              model.evolve(s"e$i")
               extras = extras :+ s"e$i"
           }
         }
-        // full-width compare: evolved columns included (they must be
-        // null-filled identically for rows written before/after the
-        // evolution), column order normalized
-        def content(st: graft.store.TableStore) = {
-          val df = st.scan("p.eq")
-          val cols = df.columns.sorted.toSeq
-          (cols, df.select(cols.map(col): _*).collect()
-            .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
-        }
-        content(a) == content(b)
+        // full-width compare: evolved columns included (null-filled for
+        // rows written before the evolution), column order normalized
+        val got = storeContent(store, "p.eq")
+        store.close()
+        ok && got == model.content
       }
     }
 
   property("backends agree on a GUARANTEED evolution-interleaved sequence") =
     {
       // the random mix above may draw few (or zero) Evolve ops in a
-      // 5-case run; this pins the worst case deterministically: rows
-      // written BEFORE each evolution must read back with identical
-      // null-fill through upsert rewrites and COW deletes after it
+      // 5-case run; this pins the worst case deterministically against
+      // the reference model: rows written BEFORE each evolution must
+      // read back null-filled through upsert rewrites and COW deletes
+      // after it, while evolved rows carry their written values
       Prop.forAll(Gen.oneOf(false, true)) { partitioned =>
         val s = sp
         import s.implicits._
-        val a = new ParquetTableStore(s,
-          java.nio.file.Files.createTempDirectory("evp").toString)
-        val b = new graft.store.LogTableStore(s,
+        val store = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("evl").toString)
+        val model = new KeyedModel(Seq("id", "v", "part"))
         val schema = Seq((0L, "x", 0L)).toDF("id", "v", "part").schema
-        val parts = if (partitioned) Seq("part") else Nil
-        a.ensure("p.ev", schema, parts); b.ensure("p.ev", schema, parts)
+        store.ensure("p.ev", schema, if (partitioned) Seq("part") else Nil)
         def df(ks: Int*)(tag: String) =
           ks.map(k => (k.toLong, s"$tag$k", (k % 3).toLong))
             .toDF("id", "v", "part")
+        def rows(ks: Int*)(tag: String) = ks.map(k => Map[String, Any](
+          "id" -> k.toLong, "v" -> s"$tag$k", "part" -> (k % 3).toLong))
         val e1 = org.apache.spark.sql.types.StructField("extra1",
           org.apache.spark.sql.types.LongType, nullable = true)
         val e2 = org.apache.spark.sql.types.StructField("extra2",
           org.apache.spark.sql.types.StringType, nullable = true)
-        for (st <- Seq(a, b): Seq[graft.store.TableStore]) {
-          st.mergeInsertOnly("p.ev", df(1, 2, 3)("n"), Seq("id"))
-          st.addColumn("p.ev", e1)
-          // post-evolution batches carry the current schema with REAL
-          // values: the upsert rewrite and the final state must keep
-          // pre-evolution rows null-filled while evolved rows carry
-          // their written values — identically on both backends
-          st.mergeUpsert("p.ev",
-            df(2, 4)("u").withColumn("extra1", col("id") + 100), Seq("id"))
-          st.addColumn("p.ev", e2)
-          st.delete("p.ev", col("id") === 3)
-          st.mergeInsertOnly("p.ev",
-            df(5)("n").withColumn("extra1", col("id") + 100)
-              .withColumn("extra2", concat(lit("s"), col("id"))), Seq("id"))
-        }
-        def content(st: graft.store.TableStore) = {
-          val d = st.scan("p.ev")
-          val cols = d.columns.sorted.toSeq
-          (cols, d.select(cols.map(col): _*).collect()
-            .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
-        }
-        val (ca, cb) = (content(a), content(b))
-        ca._1.contains("extra1") && ca._1.contains("extra2") &&
-          ca._2.size == 4 && ca == cb
+        store.mergeInsertOnly("p.ev", df(1, 2, 3)("n"), Seq("id"))
+        model.insert(rows(1, 2, 3)("n"))
+        store.addColumn("p.ev", e1); model.evolve("extra1")
+        store.mergeUpsert("p.ev",
+          df(2, 4)("u").withColumn("extra1", col("id") + 100), Seq("id"))
+        model.upsert(rows(2, 4)("u").map(r =>
+          r + ("extra1" -> (r("id").asInstanceOf[Long] + 100))))
+        store.addColumn("p.ev", e2); model.evolve("extra2")
+        store.delete("p.ev", col("id") === 3)
+        model.delete(_ == 3L)
+        store.mergeInsertOnly("p.ev",
+          df(5)("n").withColumn("extra1", col("id") + 100)
+            .withColumn("extra2", concat(lit("s"), col("id"))), Seq("id"))
+        model.insert(rows(5)("n").map(_ ++ Map("extra1" -> 105L,
+          "extra2" -> "s5")))
+        val got = storeContent(store, "p.ev")
+        store.close()
+        got._1.contains("extra1") && got._1.contains("extra2") &&
+          got._2.size == 4 && got == model.content
       }
     }
 
   property("CDC replica tracks the log store through random op sequences") =
     {
-      // the changefeed-consumer closure of the backend differential:
-      // whatever keyed op sequence the transactional store commits,
-      // applying its changes() windows (per-version or one wide
-      // window) to a replica in the OTHER backend must land on
-      // bit-identical content. Evolution excluded: replica schema
-      // tracking across mid-window DDL is consumer policy, not feed
-      // semantics (the feed itself diffs shared columns only).
+      // the changefeed-consumer closure of the model differential:
+      // whatever keyed op sequence the source store commits, applying
+      // its changes() windows (per-version or one wide window) to a
+      // replica in a SEPARATE store root must land on the source's
+      // content, and both on the reference model's. Evolution
+      // excluded: replica schema tracking across mid-window DDL is
+      // consumer policy, not feed semantics (the feed itself diffs
+      // shared columns only).
       sealed trait Op
       case class Insert(ks: List[Int]) extends Op
       case class Upsert(ks: List[Int]) extends Op
@@ -243,25 +271,34 @@ object PropertyProps extends Properties("graft") {
         (ops, wide) =>
         val s = sp
         import s.implicits._
-        val src = new graft.store.LogTableStore(s,
+        val src = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("cdcpsrc").toString)
+        val model = new KeyedModel(Seq("id", "v"))
         val schema = Seq((0L, "x")).toDF("id", "v").schema
         src.ensure("p.cdc", schema)
         var vs = Vector(src.versions("p.cdc").last)
         ops.zipWithIndex.foreach { case (op, i) =>
           def df(ks: List[Int], tag: String) =
             ks.map(k => (k.toLong, s"$tag$k-$i")).toDF("id", "v")
+          def rows(ks: List[Int], tag: String) = ks.map(k =>
+            Map[String, Any]("id" -> k.toLong, "v" -> s"$tag$k-$i"))
           op match {
-            case Insert(ks) => src.mergeInsertOnly("p.cdc", df(ks, "n"), Seq("id"))
-            case Upsert(ks) => src.mergeUpsert("p.cdc", df(ks, "u"), Seq("id"))
-            case Delete(m)  => src.delete("p.cdc", col("id") % m === 0)
+            case Insert(ks) =>
+              src.mergeInsertOnly("p.cdc", df(ks, "n"), Seq("id"))
+              model.insert(rows(ks, "n"))
+            case Upsert(ks) =>
+              src.mergeUpsert("p.cdc", df(ks, "u"), Seq("id"))
+              model.upsert(rows(ks, "u"))
+            case Delete(m) =>
+              src.delete("p.cdc", col("id") % m === 0)
+              model.delete(_ % m == 0)
           }
           // no-op ops (all-dup insert, empty delete) commit nothing —
           // only record versions that actually advanced
           val v = src.versions("p.cdc").last
           if (v != vs.last) vs :+= v
         }
-        val target = new ParquetTableStore(s,
+        val target = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("cdcpdst").toString)
         target.ensure("p.cdc", schema)
         if (wide) {
@@ -272,10 +309,10 @@ object PropertyProps extends Properties("graft") {
           for (Seq(f, t) <- vs.sliding(2) if t != f)
             graft.store.CdcReplica(src, "p.cdc", target, "p.cdc",
               f, t, Seq("id"))
-        def content(st: graft.store.TableStore) =
-          st.scan("p.cdc").collect()
-            .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-        content(src) == content(target)
+        val (srcRows, dstRows) =
+          (storeContent(src, "p.cdc"), storeContent(target, "p.cdc"))
+        src.close(); target.close()
+        srcRows == model.content && dstRows == srcRows
       }
     }
 
@@ -298,11 +335,11 @@ object PropertyProps extends Properties("graft") {
       Prop.forAll(Gen.listOfN(6, stepGen)) { steps =>
         val s = sp
         import s.implicits._
-        val src = new graft.store.LogTableStore(s,
+        val src = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("cdcrace").toString)
         val schema = Seq((0L, "x")).toDF("id", "v").schema
         src.ensure("p.cdc", schema)
-        val tgt = new graft.store.ParquetTableStore(s,
+        val tgt = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("cdcracedst").toString)
         var n = 0
         def commit(op: Int, ks: List[Int]): Unit = {
@@ -367,7 +404,7 @@ object PropertyProps extends Properties("graft") {
         val docsDf = docs.toDF("doc_id", "lang", "source", "n_tokens",
           "quality_score")
         val pairsDf = pairs.toDF("doc_a", "doc_b")
-        val store = new graft.store.ParquetTableStore(s,
+        val store = new LogTableStore(s,
           java.nio.file.Files.createTempDirectory("corpprop").toString)
         try {
         val batchOfDoc = assign.zipWithIndex
@@ -514,7 +551,7 @@ object PropertyProps extends Properties("graft") {
       Gen.choose(0, 20)) { (rows, cutoff) =>
       val s = sp
       import s.implicits._
-      val store = new ParquetTableStore(s,
+      val store = new LogTableStore(s,
         java.nio.file.Files.createTempDirectory("propdel").toString)
       val df = rows.zipWithIndex.map { case ((v, p), i) =>
         (i.toLong, s"p$p", v.toDouble) }.toDF("id", "part", "v")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.pipeline.LlmOrchestrator
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 
 /** Differential oracle for the incremental corpus gold: after every
   * batch, the maintained cluster/keeper state and the published
@@ -43,7 +43,7 @@ class IncrementalCorpusSpec extends SparkSpec {
         r.getLong(6))).toSet
 
   test("incremental fold ≡ batch recompute across merges, demotions, ties") {
-    val store = new ParquetTableStore(spark, tmpDir("inccorpus"))
+    val store = new LogTableStore(spark, tmpDir("inccorpus"))
 
     val b1: Seq[Doc] = Seq((1L, "en", "web", 40, 0.9),
       (2L, "en", "web", 35, 0.5), (3L, "en", "books", 50, 0.8))
@@ -100,7 +100,7 @@ class IncrementalCorpusSpec extends SparkSpec {
   }
 
   test("bucket count is chosen at creation, persisted, and read back") {
-    val store = new ParquetTableStore(spark, tmpDir("inccorpbk"))
+    val store = new LogTableStore(spark, tmpDir("inccorpbk"))
     IncrementalCorpus.ensure(store, buckets = 32)
     assert(IncrementalCorpus.bucketCount(store, "docs.cluster_state") === 32)
     // re-ensure with a different count: the persisted choice wins —

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.store.{LogTableStore, ParquetTableStore, TableStore}
+import graft.store.{LogTableStore, TableStore}
 import org.apache.spark.sql.functions._
 
 /** The incremental closure must be indistinguishable from the
@@ -47,9 +47,12 @@ class IncrementalCcSpec extends SparkSpec {
     val n = 120
     val pairs = Seq.fill(260)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
     val expected = oneShot(pairs)
+    // the default log layout, and one that checkpoints every second
+    // commit so the folds resolve state through checkpoint entries
     for ((mkStore, tag) <- Seq(
         ((r: String) => new LogTableStore(spark, r): TableStore, "log"),
-        ((r: String) => new ParquetTableStore(spark, r): TableStore, "parquet"))) {
+        ((r: String) => new LogTableStore(spark, r, checkpointInterval = 2):
+          TableStore, "log-ckpt2"))) {
       val store = mkStore(tmpDir(s"icc$tag"))
       IncrementalCc.ensure(store, "t.cc")
       // three uneven batches, order-scrambled

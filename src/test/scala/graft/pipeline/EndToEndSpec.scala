@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.dq.{GateResult, Notifier}
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.streaming.{BronzeStreamingJob, EventSource}
 import graft.wiki.{Clock, FixtureData}
 
@@ -38,7 +38,7 @@ class EndToEndSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
 
     // 2. streaming ingestion into Bronze
-    val store = new ParquetTableStore(spark, tmpDir("e2e_store"))
+    val store = new LogTableStore(spark, tmpDir("e2e_store"))
     val job = new BronzeStreamingJob(store, "bronze.raw_events",
       tmpDir("e2e_ckpt"), Trigger.ProcessingTime(0),
       Clock.fixed("2024-01-02 15:00:00"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dq.{GateResult, Notifier}
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.streaming.DocumentIngest
 
 /** Edge paths of the llmdata batch cycle that the streamed end-to-end
@@ -30,7 +30,7 @@ class LlmOrchestratorSpec extends SparkSpec {
   }
 
   test("first cycle with no pairs table: every doc is its own keeper") {
-    val store = new ParquetTableStore(spark, tmpDir("llmorch1"))
+    val store = new LogTableStore(spark, tmpDir("llmorch1"))
     store.ensure("docs.ingested", DocumentIngest.IngestedSchema,
       Seq("digest_bucket"))
     store.append("docs.ingested", ingestedDocs(Seq(
@@ -100,8 +100,8 @@ class LlmOrchestratorSpec extends SparkSpec {
           .saveAsTable(pairsTable)
       else df.write.mode("append").format("parquet").insertInto(pairsTable)
     }
-    val storeB = new ParquetTableStore(spark, tmpDir("orchccB"))
-    val storeI = new ParquetTableStore(spark, tmpDir("orchccI"))
+    val storeB = new LogTableStore(spark, tmpDir("orchccB"))
+    val storeI = new LogTableStore(spark, tmpDir("orchccI"))
     for (s <- Seq(storeB, storeI)) {
       s.ensure("docs.ingested", DocumentIngest.IngestedSchema,
         Seq("digest_bucket"))
@@ -191,7 +191,7 @@ class LlmOrchestratorSpec extends SparkSpec {
   }
 
   test("empty corpus: the cycle completes with empty outputs, no crash") {
-    val store = new ParquetTableStore(spark, tmpDir("llmorch2"))
+    val store = new LogTableStore(spark, tmpDir("llmorch2"))
     store.ensure("docs.ingested", DocumentIngest.IngestedSchema,
       Seq("digest_bucket"))
 

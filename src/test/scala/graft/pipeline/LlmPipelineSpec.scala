@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.llmdata._
 import graft.operators.ConnectedComponents
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.streaming.DocumentIngest
 
 /** Golden end-to-end for the training-data side: streamed ingest
@@ -46,7 +46,7 @@ class LlmPipelineSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    val store = new ParquetTableStore(spark, tmpDir("llmpipe"))
+    val store = new LogTableStore(spark, tmpDir("llmpipe"))
     val input = MemoryStream[Doc]
     val ingest = new DocumentIngest(store, "docs.ingested",
       tmpDir("llmpipeck"), Trigger.ProcessingTime(0), "10 minutes")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.dq.{GateResult, Notifier}
 import graft.llmdata.{AnnIndex, DedupFunctions, Similarity}
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.streaming.{DocumentIngest, EmbeddingIngest, StreamingLshJob}
 
 /** The FULL training-data loop, streamed end-to-end over two
@@ -215,10 +215,13 @@ class LlmStreamingEndToEndSpec extends SparkSpec {
   }
 
   test("streamed ingest+index+append → orchestrated cycle ≡ batch recompute") {
-    runE2E(new ParquetTableStore(spark, tmpDir("llme2e")))
+    runE2E(new LogTableStore(spark, tmpDir("llme2e")))
   }
 
   test("the full streamed pipeline runs unchanged on the transactional log store") {
-    runE2E(new graft.store.LogTableStore(spark, tmpDir("llme2elog")))
+    // a checkpoint every second commit: every table the pipeline
+    // touches resolves through checkpoint + delta entries
+    runE2E(new LogTableStore(spark, tmpDir("llme2elog"),
+      checkpointInterval = 2))
   }
 }

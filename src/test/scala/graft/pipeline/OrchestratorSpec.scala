@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dq.{Notifier, GateResult}
-import graft.store.{LogTableStore, ParquetTableStore, TableStore}
+import graft.store.{LogTableStore, TableStore}
 import graft.wiki._
 
 class OrchestratorSpec extends SparkSpec {
@@ -24,7 +24,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("full cycle: bronzeDQ → silver → silverDQ → gold → goldDQ") {
-    val store = new ParquetTableStore(spark, tmpDir("pipe"))
+    val store = new LogTableStore(spark, tmpDir("pipe"))
     seedBronze(store)
     val orch = new Orchestrator(spark, store,
       Clock.fixed("2024-01-02 16:00:00"), QuietNotifier)
@@ -51,10 +51,11 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("full cycle runs unchanged on the transactional LogTableStore backend") {
-    // every pipeline stage goes through the TableStore trait, so the
-    // manifest-log backend must serve the identical cycle — including
-    // the idempotent rerun (its MERGEs are the real copy-on-write ones)
-    val store = new LogTableStore(spark, tmpDir("pipelog"))
+    // the identical cycle with a checkpoint every second commit, so
+    // every stage reads tables resolved from checkpoint + delta
+    // entries — including the idempotent rerun's copy-on-write MERGEs
+    val store = new LogTableStore(spark, tmpDir("pipelog"),
+      checkpointInterval = 2)
     seedBronze(store)
     val orch = new Orchestrator(spark, store,
       Clock.fixed("2024-01-02 16:00:00"), QuietNotifier)
@@ -73,13 +74,14 @@ class OrchestratorSpec extends SparkSpec {
 
   test("restarted batch run (fresh JVM registry) keeps declared types") {
     val root = tmpDir("piperestart")
-    val s1 = new ParquetTableStore(spark, root)
+    val s1 = new LogTableStore(spark, root)
     seedBronze(s1)
     // simulate a restart: a brand-new store instance against the same
-    // root (the in-memory registry is empty; _meta.json must supply
-    // declared types, or partition-inferred event_date DATE would leak
-    // into the silver written this cycle)
-    val s2 = new ParquetTableStore(spark, root)
+    // root with its JVM caches dropped (the commit log must supply the
+    // declared types, e.g. event_date STRING, to the silver written
+    // this cycle)
+    s1.close()
+    val s2 = new LogTableStore(spark, root)
     val orch = new Orchestrator(spark, s2,
       Clock.fixed("2024-01-02 16:00:00"), QuietNotifier)
     val result = orch.runCycle("run-r1", "2024-01-02", "2024-01-02")
@@ -92,7 +94,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("failed bronze gate blocks downstream (D14 fail-fast)") {
-    val store = new ParquetTableStore(spark, tmpDir("pipe2"))
+    val store = new LogTableStore(spark, tmpDir("pipe2"))
     seedBronze(store)
     // corrupt bronze: an out-of-vocabulary event_type
     val bad = store.scan("bronze.raw_events")

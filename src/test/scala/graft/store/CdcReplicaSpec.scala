@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The replica must equal the source at every applied horizon — for
-  * any window split, across both target backends, and under window
-  * replay. */
+  * any window split, in a separate store root or beside the source in
+  * its own root, and under window replay. */
 class CdcReplicaSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -38,12 +38,14 @@ class CdcReplicaSpec extends SparkSpec {
   }
 
   test("window-by-window apply tracks the source exactly (both target backends)") {
+    // targets: a separate store root, and the source's own store (the
+    // replica table beside the source table, sharing its caches)
     for ((mkTarget, tag) <- Seq(
-        ((r: String) => new ParquetTableStore(spark, r): TableStore, "parquet"),
-        ((r: String) => new LogTableStore(spark, r): TableStore, "log"))) {
+        ((_: LogTableStore) => new LogTableStore(spark, tmpDir("cdcdst")), "separate"),
+        ((src: LogTableStore) => src, "same-root"))) {
       val src = new LogTableStore(spark, tmpDir("cdcsrc"))
       val vs = buildSource(src)
-      val target = mkTarget(tmpDir(s"cdcdst$tag"))
+      val target: TableStore = mkTarget(src)
       for (Seq(from, to) <- vs.sliding(2)) {
         CdcReplica(src, "src.t", target, "dst.t", from, to, Seq("k"))
         assert(contentOf(target, "dst.t") ===
@@ -59,7 +61,7 @@ class CdcReplicaSpec extends SparkSpec {
   test("one wide window equals the window-by-window apply (squash safety)") {
     val src = new LogTableStore(spark, tmpDir("cdcsrc2"))
     val vs = buildSource(src)
-    val wide = new ParquetTableStore(spark, tmpDir("cdcw"))
+    val wide = new LogTableStore(spark, tmpDir("cdcw"))
     CdcReplica(src, "src.t", wide, "dst.t", vs.head, vs.last, Seq("k"))
     // key 1 was inserted AND deleted inside the window: it must never
     // surface in the replica (the feed squashes it to nothing
@@ -72,7 +74,7 @@ class CdcReplicaSpec extends SparkSpec {
     val src = new LogTableStore(spark, tmpDir("cdcsync"))
     src.ensure("src.t", schema)
     src.append("src.t", keyed(Seq((1L, "a"), (2L, "b"))))
-    val t = new ParquetTableStore(spark, tmpDir("cdcsyncdst"))
+    val t = new LogTableStore(spark, tmpDir("cdcsyncdst"))
     def inSync(): Unit =
       assert(contentOf(t, "dst.t") ===
         src.scan("src.t").collect()
@@ -107,13 +109,13 @@ class CdcReplicaSpec extends SparkSpec {
     // delete set must flow through the target's keyed COW anti-join
     // as a DataFrame — never a driver collect, never an isin literal
     for ((mkTarget, tag) <- Seq(
-        ((r: String) => new ParquetTableStore(spark, r): TableStore, "parquet"),
-        ((r: String) => new LogTableStore(spark, r): TableStore, "log"))) {
+        ((_: LogTableStore) => new LogTableStore(spark, tmpDir("cdcbigdst")), "separate"),
+        ((src: LogTableStore) => src, "same-root"))) {
       val src = new LogTableStore(spark, tmpDir(s"cdcbig$tag"))
       src.ensure("src.t", schema)
       src.append("src.t", spark.range(60000)
         .select(col("id").as("k"), concat(lit("v"), col("id")).as("s")))
-      val t = mkTarget(tmpDir(s"cdcbigdst$tag"))
+      val t: TableStore = mkTarget(src)
       val (_, seeded) = CdcReplica.sync(src, "src.t", t, "dst.t", Seq("k"))
       val removedAtSource = src.delete("src.t", col("k") % 3 =!= 0L)
       assert(removedAtSource === 40000L)
@@ -132,7 +134,7 @@ class CdcReplicaSpec extends SparkSpec {
   test("re-applying the most recent window is a no-op (crash-recovery replay)") {
     val src = new LogTableStore(spark, tmpDir("cdcsrc3"))
     val vs = buildSource(src)
-    val t = new ParquetTableStore(spark, tmpDir("cdcr"))
+    val t = new LogTableStore(spark, tmpDir("cdcr"))
     for (Seq(from, to) <- vs.sliding(2))
       CdcReplica(src, "src.t", t, "dst.t", from, to, Seq("k"))
     val before = contentOf(t, "dst.t")

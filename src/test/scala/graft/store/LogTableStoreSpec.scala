@@ -7,9 +7,8 @@ import java.nio.file.{Files, Paths}
 
 /** The transactional (manifest-log) store: atomic commit visibility,
   * optimistic concurrency, copy-on-write pruning, time travel, vacuum
-  * reachability. Where behavior overlaps ParquetTableStore (the merge
-  * semantics S7/S8/S11), the assertions mirror TableStoreSpec so the
-  * two backends provably agree.
+  * reachability. The trait-level MERGE/DELETE contract (S7/S8/S11,
+  * evolution, snapshots, Bloom) is pinned in TableStoreSpec.
   */
 class LogTableStoreSpec extends SparkSpec {
 
@@ -542,16 +541,6 @@ class LogTableStoreSpec extends SparkSpec {
       keyed(Seq((1L, "a"), (3L, "c"))), Seq("k")) === 1L)
     assert(reopened.scan("t.cl").count() === 3L)
     reopened.close()
-    // parquet backend: same eviction contract for its bloom caches
-    val proot = tmpDir("pclose")
-    val prootKey = Paths.get(proot).toAbsolutePath.normalize.toString
-    val ps = new ParquetTableStore(spark, proot)
-    ps.ensure("t.cl", keyedSchema)
-    ps.enableKeyBloom("t.cl", Seq("k"), expectedItems = 1000L)
-    ps.mergeInsertOnly("t.cl", keyed(Seq((1L, "a"))), Seq("k"))
-    assert(ParquetTableStore.cacheEntryCount(prootKey) > 0)
-    ps.close()
-    assert(ParquetTableStore.cacheEntryCount(prootKey) === 0)
   }
 
   test("mergeUpsert: a mixed update+append batch rewrites only the " +

@@ -3,10 +3,17 @@ package graft.store
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
+import java.nio.file.{Files, Paths}
 
+/** The [[TableStore]] contract the pipeline relies on — MERGE, DELETE,
+  * schema evolution, snapshots, compaction, the key Bloom — run
+  * against its implementation, [[LogTableStore]]. Protocol internals
+  * (commit log, checkpoints, CAS, vacuum reachability) live in
+  * LogTableStoreSpec.
+  */
 class TableStoreSpec extends SparkSpec {
 
-  private def freshStore = new ParquetTableStore(spark, tmpDir("store"))
+  private def freshStore = new LogTableStore(spark, tmpDir("store"))
 
   private def df(rows: Seq[(String, String, Double)]) = {
     val sp = spark
@@ -17,6 +24,13 @@ class TableStoreSpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("id", StringType), StructField("part", StringType),
     StructField("v", DoubleType)))
+
+  private def idsOf(store: TableStore, name: String): Set[String] =
+    store.scan(name).select("id").collect().map(_.getString(0)).toSet
+
+  /** Live data files holding rows of one partition value. */
+  private def filesOf(store: TableStore, name: String, part: String) =
+    store.scanRange(name, "part", part, part).inputFiles.toSet
 
   test("ensure + append + scan round trip with partitioning") {
     val store = freshStore
@@ -43,29 +57,21 @@ class TableStoreSpec extends SparkSpec {
   test("S8 mergeUpsert updates matched keys, keeps unmatched, only rewrites touched partitions") {
     val store = freshStore
     store.ensure("t.up", schema, Seq("part"))
-    store.append("t.up",
-      df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0), ("c", "p2", 3.0))))
+    store.append("t.up", df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0))))
+    store.append("t.up", df(Seq(("x", "p2", 3.0))))
+    val p2Before = filesOf(store, "t.up", "p2")
     store.mergeUpsert("t.up",
       df(Seq(("a", "p1", 10.0), ("d", "p1", 4.0))), Seq("id"))
     val out = store.scan("t.up").collect()
       .map(r => r.getAs[String]("id") -> r.getAs[Double]("v")).toMap
-    assert(out === Map("a" -> 10.0, "b" -> 2.0, "c" -> 3.0, "d" -> 4.0))
+    assert(out === Map("a" -> 10.0, "b" -> 2.0, "x" -> 3.0, "d" -> 4.0))
+    // p2's file holds no incoming key and its key zone [x, x] lies
+    // outside the batch's [a, d]: it is not rewritten
+    assert(filesOf(store, "t.up", "p2") === p2Before)
     // idempotent under replay
     store.mergeUpsert("t.up",
       df(Seq(("a", "p1", 10.0), ("d", "p1", 4.0))), Seq("id"))
     assert(store.scan("t.up").count() === 4)
-  }
-
-  test("alternate sink format (ORC) supports the full merge surface") {
-    val store = new ParquetTableStore(spark, tmpDir("orcstore"), "orc")
-    store.ensure("t.orc", schema, Seq("part"))
-    store.append("t.orc", df(Seq(("a", "p1", 1.0), ("b", "p2", 2.0))))
-    assert(store.mergeInsertOnly("t.orc",
-      df(Seq(("a", "p1", 1.0), ("c", "p1", 3.0))), Seq("id")) === 1)
-    store.mergeUpsert("t.orc", df(Seq(("b", "p2", 20.0))), Seq("id"))
-    val out = store.scan("t.orc").collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[Double]("v")).toMap
-    assert(out === Map("a" -> 1.0, "b" -> 20.0, "c" -> 3.0))
   }
 
   test("compaction packs many small files into few, data intact") {
@@ -75,13 +81,11 @@ class TableStoreSpec extends SparkSpec {
     (1 to 10).foreach { i =>
       store.append("t.cmp", df(Seq((s"r$i", s"p${i % 2}", i.toDouble))))
     }
-    val beforeRows = store.scan("t.cmp").collect()
-      .map(r => r.getAs[String]("id")).toSet
+    val beforeRows = idsOf(store, "t.cmp")
     val (before, after) = store.compact("t.cmp")
     assert(before >= 10)
     assert(after < before)
-    assert(store.scan("t.cmp").collect()
-      .map(r => r.getAs[String]("id")).toSet === beforeRows)
+    assert(idsOf(store, "t.cmp") === beforeRows)
   }
 
   test("clustered compaction sorts rows within files, data intact") {
@@ -91,9 +95,9 @@ class TableStoreSpec extends SparkSpec {
     Seq(Seq(("z9", "p1", 9.0), ("a1", "p1", 1.0)),
       Seq(("m5", "p1", 5.0), ("b2", "p1", 2.0)),
       Seq(("q7", "p1", 7.0), ("c3", "p1", 3.0))).foreach(r => store.append("t.cl", df(r)))
-    val beforeIds = store.scan("t.cl").collect().map(_.getString(0)).toSet
+    val beforeIds = idsOf(store, "t.cl")
     store.compact("t.cl", targetBytes = 1200L, clusterBy = Seq("id"))
-    assert(store.scan("t.cl").collect().map(_.getString(0)).toSet === beforeIds)
+    assert(idsOf(store, "t.cl") === beforeIds)
     // every output file is internally sorted by id (row-group stats
     // become selective for id predicates)
     assert(store.scan("t.cl").inputFiles.nonEmpty)
@@ -109,76 +113,54 @@ class TableStoreSpec extends SparkSpec {
     store.append("t.del",
       df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0), ("c", "p2", 3.0))))
     assert(store.delete("t.del", col("id") === "b") === 1)
-    assert(store.scan("t.del").select("id").collect().map(_.getString(0))
-      .toSet === Set("a", "c"))
+    assert(idsOf(store, "t.del") === Set("a", "c"))
     // no-match delete leaves the table untouched
     assert(store.delete("t.del", col("id") === "zzz") === 0)
     assert(store.scan("t.del").count() === 2)
   }
 
   test("S11 delete rewrites only touched partitions; emptied partitions are dropped") {
-    val root = tmpDir("delpart")
-    val store = new ParquetTableStore(spark, root)
+    val store = freshStore
     store.ensure("t.dp", schema, Seq("part"))
-    store.append("t.dp", df(Seq(
-      ("a", "p1", 1.0), ("b", "p1", 2.0), ("c", "p2", 3.0), ("d", "p3", 4.0))))
-    // untouched partitions keep their original files (no rewrite)
-    def p3files() = {
-      val d = java.nio.file.Paths.get(root, "t/dp/part=p3")
-      val s = java.nio.file.Files.list(d)
-      try s.toArray.map(_.toString).toSet finally s.close()
-    }
-    val before = p3files()
+    // one append per partition: each value gets its own file
+    Seq(Seq(("a", "p1", 1.0), ("b", "p1", 2.0)), Seq(("c", "p2", 3.0)),
+      Seq(("d", "p3", 4.0))).foreach(r => store.append("t.dp", df(r)))
+    val p3Before = filesOf(store, "t.dp", "p3")
     // delete every row of p2 + one row of p1
     assert(store.delete("t.dp", col("id").isin("b", "c")) === 2)
-    val out = store.scan("t.dp").select("id").collect().map(_.getString(0)).toSet
-    assert(out === Set("a", "d"))
-    // p2's directory is gone (fully emptied), p3's files untouched
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "t/dp/part=p2")))
-    assert(p3files() === before)
+    assert(idsOf(store, "t.dp") === Set("a", "d"))
+    // p2 has no live file left (fully emptied), p3's file is untouched
+    assert(filesOf(store, "t.dp", "p2").isEmpty)
+    assert(filesOf(store, "t.dp", "p3") === p3Before)
   }
 
   test("S11 emptied-partition drop handles writer-escaped partition values") {
-    // Spark's Hive-style writer leaves space/comma/+ literal and only
-    // percent-escapes its fixed reserved set (:, /, #, ...). The cleanup
-    // must reconstruct the exact same directory name or fully-deleted
-    // partitions silently survive with stale rows.
-    val root = tmpDir("delesc")
-    val store = new ParquetTableStore(spark, root)
+    // values a Hive-style writer leaves literal (space, comma, +) or
+    // percent-escapes (:, /): partition values are ordinary column data
+    // in the files, so deleting each must empty exactly its rows and
+    // leave no live file behind once the last one is gone
+    val store = freshStore
     store.ensure("t.esc", schema, Seq("part"))
-    // (non-ASCII values are covered by delegating to Spark's own
-    // escapePathName — both writer and cleanup leave chars ≥ 0x80
-    // literal; this sandbox JVM's filename encoding can't write them
-    // at all, so they aren't exercised end-to-end here)
     val values = Seq("has space", "a,b+c", "x:y/z")
     store.append("t.esc", df(values.zipWithIndex.map { case (p, i) =>
       (s"id$i", p, i.toDouble) }))
     for ((p, i) <- values.zipWithIndex) {
       assert(store.delete("t.esc", col("part") === p) === 1, s"value '$p'")
-      // stale-row check: a survived directory would resurface the row
-      // (skip the scan once the table is fully emptied — nothing to read)
-      if (i < values.size - 1)
-        assert(store.scan("t.esc").filter(col("part") === p).count() === 0L)
+      assert(store.scan("t.esc").filter(col("part") === p).count() === 0L)
+      assert(store.scan("t.esc").count() === values.size - 1 - i)
     }
-    // every partition emptied → only metadata remains under the table dir
-    val d = java.nio.file.Paths.get(root, "t/esc")
-    val leftovers = {
-      val s = java.nio.file.Files.list(d)
-      try s.toArray.map(_.toString).filter(_.contains("part="))
-      finally s.close()
-    }
-    assert(leftovers.isEmpty, s"stale partition dirs: ${leftovers.toSeq}")
+    assert(store.scan("t.esc").inputFiles.isEmpty,
+      "an emptied table still references data files")
   }
 
   test("S11 delete of every row in a non-partitioned table empties it cleanly") {
-    val root = tmpDir("delall")
-    val store = new ParquetTableStore(spark, root)
+    val store = freshStore
     store.ensure("t.all", schema, Nil)
     store.append("t.all", df(Seq(("a", "p1", 1.0), ("b", "p2", 2.0))))
-    // full-scope delete stages zero data files — must not crash on the
-    // staging read-back, and the table must come back empty but usable
+    // full-scope delete stages zero data files — must not crash, and
+    // the table must come back empty but usable
     assert(store.delete("t.all", lit(true)) === 2)
+    assert(store.scan("t.all").count() === 0L)
     store.append("t.all", df(Seq(("c", "p3", 3.0))))
     assert(store.scan("t.all").select("id").collect().map(_.getString(0))
       .toSeq === Seq("c"))
@@ -186,7 +168,7 @@ class TableStoreSpec extends SparkSpec {
 
   test("metadata survives a store restart: declared types and addColumn") {
     val root = tmpDir("persist")
-    val s1 = new ParquetTableStore(spark, root)
+    val s1 = new LogTableStore(spark, root)
     val dated = StructType(Seq(
       StructField("id", StringType), StructField("event_date", StringType),
       StructField("v", DoubleType)))
@@ -194,11 +176,11 @@ class TableStoreSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     s1.append("t.per", Seq(("a", "2024-01-02", 1.0)).toDF("id", "event_date", "v"))
     s1.addColumn("t.per", StructField("extra", IntegerType))
+    s1.close() // drop this root's JVM caches: the restart reads disk only
 
-    // brand-new instance, same root — in-memory registry empty
-    val s2 = new ParquetTableStore(spark, root)
+    val s2 = new LogTableStore(spark, root)
     val out = s2.scan("t.per")
-    // partition inference would read event_date as DATE; declared STRING wins
+    // a date-shaped partition value stays the declared STRING
     assert(out.schema("event_date").dataType === StringType)
     // the addColumn evolution survived the restart
     assert(out.columns.contains("extra"))
@@ -209,38 +191,11 @@ class TableStoreSpec extends SparkSpec {
     assert(s2.scan("t.per").columns.contains("extra"))
   }
 
-  test("scan pays mergeSchema only after evolution") {
-    val store = freshStore
-    store.ensure("t.ev", schema, Nil)
-    assert(store.metaOf("t.ev").exists(!_.evolved))
-    store.addColumn("t.ev", StructField("extra", IntegerType))
-    assert(store.metaOf("t.ev").exists(_.evolved))
-  }
-
-  test("mergeInsertOnly probe prunes to the incoming batch's partitions") {
-    val store = freshStore
-    store.ensure("t.pr", schema, Seq("part"))
-    store.append("t.pr", df(Seq(
-      ("a", "p1", 1.0), ("b", "p2", 2.0), ("c", "p3", 3.0))))
-    val plan = store.freshRows("t.pr", df(Seq(("x", "p2", 9.0))), Seq("id"))
-      .queryExecution.executedPlan.toString
-    // the target-side file scan must carry a partition filter on `part`
-    assert(plan.contains("PartitionFilters"),
-      s"no file scan with partition filters in:\n$plan")
-    assert("PartitionFilters: \\[[^\\]]*part".r.findFirstIn(plan).isDefined,
-      s"probe scan not partition-pruned:\n$plan")
-    // and the merge result is still correct
-    assert(store.mergeInsertOnly("t.pr",
-      df(Seq(("b", "p2", 2.0), ("x", "p2", 9.0))), Seq("id")) === 1)
-    assert(store.scan("t.pr").count() === 4)
-  }
-
   test("snapshot pins state across upsert, delete, and schema evolution") {
     val store = freshStore
     store.ensure("t.snap", schema, Seq("part"))
     store.append("t.snap", df(Seq(("a", "p1", 1.0), ("b", "p2", 2.0))))
-    val v1 = store.snapshot("t.snap")
-    assert(v1 === 1L)
+    val v1 = store.versions("t.snap").last
 
     // mutate the live table every way the store can
     store.mergeUpsert("t.snap", df(Seq(("a", "p1", 10.0))), Seq("id"))
@@ -265,17 +220,16 @@ class TableStoreSpec extends SparkSpec {
     val store = freshStore
     store.ensure("t.rb", schema, Seq("part"))
     store.append("t.rb", df(Seq(("a", "p1", 1.0))))
-    val v1 = store.snapshot("t.rb")
+    val v1 = store.versions("t.rb").last
     store.append("t.rb", df(Seq(("b", "p2", 2.0))))
     store.addColumn("t.rb", StructField("extra", IntegerType))
-    val v2 = store.snapshot("t.rb")
-    assert(store.snapshots("t.rb") === Seq(v1, v2))
+    val v2 = store.versions("t.rb").last
 
     store.rollback("t.rb", v1)
     assert(store.scan("t.rb").count() === 1)
     assert(!store.scan("t.rb").columns.contains("extra"))
-    // the registry follows the restored schema (not the evolved one)
-    assert(store.metaOf("t.rb").exists(!_.evolved))
+    // history is append-only: both versions are still readable
+    assert(Seq(v1, v2).forall(store.versions("t.rb").contains))
 
     // roll forward again: v2 still exists and restores the evolved state
     store.rollback("t.rb", v2)
@@ -287,119 +241,65 @@ class TableStoreSpec extends SparkSpec {
     val store = freshStore
     store.ensure("t.exp", schema, Seq("part"))
     store.append("t.exp", df(Seq(("a", "p1", 1.0))))
-    val v1 = store.snapshot("t.exp")
+    val v1 = store.versions("t.exp").last
     store.append("t.exp", df(Seq(("b", "p2", 2.0))))
-    val v2 = store.snapshot("t.exp")
     store.append("t.exp", df(Seq(("c", "p3", 3.0))))
-    val v3 = store.snapshot("t.exp")
+    val all = store.versions("t.exp")
 
-    assert(store.expireSnapshots("t.exp", keepLast = 1) === Seq(v1, v2))
-    assert(store.snapshots("t.exp") === Seq(v3))
+    val (expired, _) = store.vacuum("t.exp", keepLast = 1, graceMillis = 0L)
+    assert(expired === all.init)
+    assert(store.versions("t.exp") === Seq(all.last))
     // expired versions are gone; the survivor and the live table read fine
     intercept[IllegalArgumentException](store.scanAt("t.exp", v1))
-    assert(store.scanAt("t.exp", v3).count() === 3)
+    assert(store.scanAt("t.exp", all.last).count() === 3)
     assert(store.scan("t.exp").count() === 3)
     // idempotent: nothing left to expire
-    assert(store.expireSnapshots("t.exp", keepLast = 1) === Seq.empty)
-  }
-
-  test("scanLenient skips a corrupt data file; strict scan fails") {
-    val root = tmpDir("corrupt")
-    val store = new ParquetTableStore(spark, root)
-    store.ensure("t.co", schema, Nil)
-    store.append("t.co", df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0))))
-    // plant a torn write beside the real files
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/t/co/part-corrupt.snappy.parquet"),
-      "not a parquet file".getBytes)
-    intercept[org.apache.spark.SparkException] {
-      store.scan("t.co").collect()
-    }
-    val survivors = store.scanLenient("t.co").collect()
-    assert(survivors.map(_.getString(0)).toSet === Set("a", "b"))
+    assert(store.vacuum("t.exp", keepLast = 1, graceMillis = 0L)._1 === Seq.empty)
   }
 
   test("diffSnapshots emits insert/delete/update_postimage between versions") {
     val store = freshStore
     store.ensure("t.cdc", schema, Seq("part"))
     store.append("t.cdc", df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0), ("c", "p2", 3.0))))
-    val v1 = store.snapshot("t.cdc")
+    val v1 = store.versions("t.cdc").last
     store.mergeUpsert("t.cdc", df(Seq(("a", "p1", 10.0), ("d", "p2", 4.0))), Seq("id"))
     store.delete("t.cdc", col("id") === "b")
-    val v2 = store.snapshot("t.cdc")
-    val changes = store.diffSnapshots("t.cdc", v1, v2, Seq("id")).collect()
+    val v2 = store.versions("t.cdc").last
+    val changes = store.changes("t.cdc", v1, v2, Seq("id")).collect()
       .map(r => r.getAs[String]("id") -> r.getAs[String]("_change_type")).toMap
     assert(changes === Map("a" -> "update_postimage", "b" -> "delete",
       "d" -> "insert"))
     // the update carries the NEW value
-    val postA = store.diffSnapshots("t.cdc", v1, v2, Seq("id"))
+    val postA = store.changes("t.cdc", v1, v2, Seq("id"))
       .filter(col("id") === "a").collect()(0).getAs[Double]("v")
     assert(postA === 10.0)
-    // identical versions diff to empty
-    assert(store.diffSnapshots("t.cdc", v2, v2, Seq("id")).count() === 0L)
+    // a window must span at least one commit
+    intercept[IllegalArgumentException](store.changes("t.cdc", v2, v2, Seq("id")))
   }
 
-  test("exportShards writes bounded, deterministic JSONL training shards") {
+  test("diffSnapshots signature is boundary- and NULL-unambiguous") {
     val sp = spark
     import sp.implicits._
     val store = freshStore
-    val docs = (1 to 17).map(i => (i.toLong, s"doc number $i", "en"))
-      .toDF("doc_id", "text", "lang")
-    val schema3 = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType), StructField("lang", StringType)))
-    store.ensure("t.ex", schema3)
-    store.append("t.ex", docs)
-    val out = tmpDir("shards")
-    val nFiles = store.exportShards("t.ex", out, recordsPerShard = 5,
-      orderBy = Seq("doc_id"))
-    assert(nFiles >= 4) // ceil(17/5)
-    // every shard respects the cap; union of shards = the table
-    val back = spark.read.json(out)
-    assert(back.count() === 17)
-    assert(back.select("doc_id").distinct().count() === 17)
-    spark.read.json(out).inputFiles.foreach { f =>
-      assert(spark.read.json(f).count() <= 5, s"$f exceeds shard cap")
-    }
-    // ordered export is deterministic: re-export produces shard files
-    // with identical row membership
-    val out2 = tmpDir("shards2")
-    store.exportShards("t.ex", out2, recordsPerShard = 5,
-      orderBy = Seq("doc_id"))
-    def shardSets(dir: String): Set[Set[Long]] =
-      spark.read.json(dir).inputFiles.map(f =>
-        spark.read.json(f).select("doc_id").collect()
-          .map(_.getLong(0)).toSet).toSet
-    assert(shardSets(out) === shardSets(out2))
-  }
-
-  test("vacuumStaging removes only stale orphaned staging dirs") {
-    val root = tmpDir("vac")
-    val store = new ParquetTableStore(spark, root)
-    val staging = java.nio.file.Paths.get(s"$root/__staging__")
-    java.nio.file.Files.createDirectories(staging.resolve("t_crashed_123"))
-    java.nio.file.Files.createDirectories(staging.resolve("t_live_456"))
-    // age the crashed one past the cutoff
-    java.nio.file.Files.setLastModifiedTime(staging.resolve("t_crashed_123"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 7200000L))
-    val removed = store.vacuumStaging(olderThanMs = 3600000L)
-    assert(removed.size === 1 && removed.head.contains("t_crashed_123"))
-    assert(!java.nio.file.Files.exists(staging.resolve("t_crashed_123")))
-    assert(java.nio.file.Files.exists(staging.resolve("t_live_456")))
-    // a completed rewrite cleans its own staging — nothing new remains
-    store.ensure("t.vc", schema, Nil)
-    store.append("t.vc", df(Seq(("a", "p1", 1.0))))
-    store.mergeUpsert("t.vc", df(Seq(("a", "p1", 2.0))), Seq("id"))
-    val stream = java.nio.file.Files.list(staging)
-    val left = try stream.toArray.map(_.toString) finally stream.close()
-    assert(left.forall(_.contains("t_live_456")), left.mkString(","))
+    val s2 = StructType(Seq(StructField("id", StringType),
+      StructField("x", StringType), StructField("y", StringType)))
+    store.ensure("t.sig", s2)
+    store.append("t.sig", Seq(("k1", "ab", "c"), ("k2", null.asInstanceOf[String], "z"))
+      .toDF("id", "x", "y"))
+    val v1 = store.versions("t.sig").last
+    // shift the column boundary ("ab","c")→("a","bc") and NULL→""
+    store.mergeUpsert("t.sig",
+      Seq(("k1", "a", "bc"), ("k2", "", "z")).toDF("id", "x", "y"), Seq("id"))
+    val v2 = store.versions("t.sig").last
+    val changes = store.changes("t.sig", v1, v2, Seq("id")).collect()
+      .map(r => r.getAs[String]("id") -> r.getAs[String]("_change_type")).toMap
+    assert(changes === Map("k1" -> "update_postimage", "k2" -> "update_postimage"))
   }
 
   test("z-order compaction bounds per-file spans on BOTH dimensions") {
     val sp = spark
     import sp.implicits._
-    val root = tmpDir("zo")
-    val store = new ParquetTableStore(spark, root)
+    val store = freshStore
     // a 32×32 grid in row-major (= lexicographic by a) order
     val grid = (0 until 32).flatMap(a => (0 until 32).map(b => (a, b)))
       .toDF("a", "b")
@@ -416,13 +316,7 @@ class TableStoreSpec extends SparkSpec {
     // every file; a lexicographic sort would leave b spanning 0..31
     // in all but degenerate files. (The span sum is what file/row-group
     // skipping sees via parquet min-max stats.)
-    val stream = java.nio.file.Files.walk(
-      java.nio.file.Paths.get(s"$root/t/zo"))
-    val files =
-      try stream.filter(_.toString.endsWith(".parquet"))
-        .toArray.map(_.toString)
-      finally stream.close()
-    val spans = files.map { f =>
+    val spans = store.scan("t.zo").inputFiles.map { f =>
       val r = spark.read.parquet(f)
         .agg(min("a"), max("a"), min("b"), max("b")).collect()(0)
       (r.getInt(1) - r.getInt(0), r.getInt(3) - r.getInt(2))
@@ -436,8 +330,7 @@ class TableStoreSpec extends SparkSpec {
   test("zone-map pruning: a range scan on a z-ordered table reads fewer files") {
     val sp = spark
     import sp.implicits._
-    val root = tmpDir("zm")
-    val store = new ParquetTableStore(spark, root)
+    val store = freshStore
     val grid = (0 until 32).flatMap(a => (0 until 32).map(b => (a, b)))
       .toDF("a", "b")
     val schema2 = StructType(Seq(
@@ -445,7 +338,7 @@ class TableStoreSpec extends SparkSpec {
     store.ensure("t.zm", schema2)
     store.append("t.zm", grid)
     store.compactZOrder("t.zm", targetBytes = 512, "a", "b")
-    val total = spark.read.parquet(s"$root/t/zm").inputFiles.length
+    val total = store.scan("t.zm").inputFiles.length
     // a narrow range on the NON-partition column a: zone-map pruning
     // must plan a scan over a strict subset of the files
     val pruned = store.scanRange("t.zm", "a", "2", "5")
@@ -470,14 +363,14 @@ class TableStoreSpec extends SparkSpec {
       StructField("n", LongType)))
     store.ensure("t.zd", schema3)
     store.append("t.zd", dated.repartitionByRange(6, col("event_date")))
-    val allD = spark.read.parquet(s"$root/t/zd").inputFiles.length
+    val allD = store.scan("t.zd").inputFiles.length
     val prunedD = store.scanRange("t.zd", "event_date",
       "2024-03-10", "2024-03-12")
     assert(prunedD.inputFiles.length < allD,
       s"no string pruning: ${prunedD.inputFiles.length} of $allD")
     assert(prunedD.collect().map(_.getLong(1)).toSet === Set(10L, 11L, 12L))
-    // partition columns keep Catalyst partition pruning (no regression)
-    val store2 = new ParquetTableStore(spark, tmpDir("zmp"))
+    // a partitioned table prunes on its partition column the same way
+    val store2 = freshStore
     store2.ensure("t.zp", schema3, Seq("event_date"))
     store2.append("t.zp", dated)
     val viaPart = store2.scanRange("t.zp", "event_date",
@@ -485,135 +378,42 @@ class TableStoreSpec extends SparkSpec {
     assert(viaPart.collect().map(_.getLong(1)).toSet === Set(10L, 11L, 12L))
   }
 
-  test("zone sidecar parse is memoized: steady state = one stat, zero parses; " +
-      "external rewrites and close() repicked") {
-    val sp = spark
-    import sp.implicits._
-    val root = tmpDir("zsmemo")
-    val store = new ParquetTableStore(spark, root)
-    val schema2 = StructType(Seq(
-      StructField("a", IntegerType), StructField("b", IntegerType)))
-    store.ensure("t.zm", schema2)
-    store.append("t.zm", (0 until 64).map(i => (i, i)).toDF("a", "b")
-      .repartitionByRange(4, col("a")))
-    def prune() = store.scanRange("t.zm", "a", "2", "5").collect()
-    prune()
-    val parses = store.sidecarParses.get()
-    prune(); prune()
-    assert(store.sidecarParses.get() === parses,
-      "steady-state planning must validate the memo by stat, not reparse " +
-        "the O(files) sidecar JSON per query") // the r14 memo contract
-    // a SECOND instance over the same root shares the companion memo
-    val twin = new ParquetTableStore(spark, root)
-    twin.scanRange("t.zm", "a", "2", "5").collect()
-    assert(twin.sidecarParses.get() === 0,
-      "same-root instances must share the parsed sidecar")
-    // an out-of-band rewrite (different stat) must be picked up —
-    // plant an EMPTY sidecar: zones re-learn from footers, not from
-    // the stale memo
-    val sc = java.nio.file.Paths.get(root, "t", "zm", "_zonemap.json")
-    java.nio.file.Files.write(sc, "{}".getBytes("UTF-8"))
-    java.nio.file.Files.setLastModifiedTime(sc,
-      java.nio.file.attribute.FileTime.fromMillis(
-        java.nio.file.Files.getLastModifiedTime(sc).toMillis + 2222))
-    val before = store.footerZoneReads.get()
-    prune()
-    assert(store.sidecarParses.get() > parses,
-      "a changed sidecar stat must invalidate the memo")
-    assert(store.footerZoneReads.get() > before,
-      "the emptied sidecar must re-learn zones from footers")
-    // close() drops this root's memo entries with the other caches
-    store.close()
-    assert(ParquetTableStore.zoneSidecars.keySet
-      .count(_.startsWith(java.nio.file.Paths.get(root)
-        .toAbsolutePath.normalize.toString + "::")) === 0)
-    prune() // and a post-close read simply repopulates
-  }
-
-  test("zone sidecar: steady-state pruning opens zero footers; staging partials invisible") {
-    val sp = spark
-    import sp.implicits._
-    val root = tmpDir("zs")
-    val store = new ParquetTableStore(spark, root)
-    val schema2 = StructType(Seq(
-      StructField("a", IntegerType), StructField("b", IntegerType)))
-    store.ensure("t.zs", schema2)
-    store.append("t.zs", (0 until 64).map(i => (i, i)).toDF("a", "b")
-      .repartitionByRange(4, col("a")))
-    // append synced the sidecar eagerly (footers read at write time)…
-    val sidecar = java.nio.file.Paths.get(root, "t", "zs", "_zonemap.json")
-    assert(java.nio.file.Files.exists(sidecar))
-    // …so query planning opens ZERO footers — the Iceberg-manifest
-    // contract (r5 re-read every footer on every scanRange)
-    val before = store.footerZoneReads.get()
-    val r1 = store.scanRange("t.zs", "a", "2", "5")
-    assert(r1.collect().map(_.getInt(0)).toSet === (2 to 5).toSet)
-    assert(store.footerZoneReads.get() === before,
-      "sidecar-answered planning must not open footers")
-    assert(r1.inputFiles.length < 4, "no pruning happened")
-    // files the sidecar has never seen are footer-read ONCE, then served
-    // from the rewritten sidecar
-    java.nio.file.Files.delete(sidecar)
-    store.scanRange("t.zs", "a", "2", "5").collect()
-    val relearned = store.footerZoneReads.get()
-    assert(relearned > before, "lost sidecar must be relearned from footers")
-    store.scanRange("t.zs", "a", "2", "5").collect()
-    assert(store.footerZoneReads.get() === relearned,
-      "second query after relearn must be footer-free")
-    // a crashed append's _temporary partial must NOT surface through
-    // scanRange (scan() already excluded hidden paths; r5's zone path
-    // did not) — plant a committed-looking file under _temporary with
-    // an in-range row and prove it stays invisible
-    val stage = tmpDir("zs-stage")
-    Seq((999, 999)).toDF("a", "b").coalesce(1)
-      .write.mode("overwrite").parquet(stage)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-      .toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .find(_.toString.endsWith(".parquet")).get
-    val hidden = java.nio.file.Paths.get(root, "t", "zs", "_temporary")
-    java.nio.file.Files.createDirectories(hidden)
-    java.nio.file.Files.copy(part, hidden.resolve("part-phantom.parquet"))
-    assert(store.scanRange("t.zs", "a", "990", "1000").count() === 0L,
-      "uncommitted staging rows leaked into scanRange")
-    assert(store.scan("t.zs").count() === 64L)
-  }
-
   test("bloom-prefiltered merge: dedup semantics unchanged, prefilter in the plan") {
-    val store = freshStore
-    store.ensure("t.bl", schema, Seq("part"))
+    val root = tmpDir("storebl1")
+    val store = new LogTableStore(spark, root)
+    store.ensure("t.bl", schema, Nil)
     store.enableKeyBloom("t.bl", Seq("id"), expectedItems = 10000L)
-    val a = df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0)))
+    // one file whose id zone [a, z] admits every probe below
+    val a = df(Seq(("a", "p1", 1.0), ("z", "p1", 2.0)))
     assert(store.mergeInsertOnly("t.bl", a, Seq("id")) === 2)
     // replay: every key is a bloom hit → probed → rejected
     assert(store.mergeInsertOnly("t.bl", a, Seq("id")) === 0)
-    // all-new batch: bloom misses skip the anti-join branch
+    assert(store.scan("t.bl").count() === 2)
+    // Probe shape: overwrite the live data file with garbage. A batch
+    // of definitely-new keys must not open the target at all (the
+    // filter drops every key from the probe side, so no target file
+    // is a candidate) — zones alone would have probed it...
+    val target = store.scan("t.bl").inputFiles.toSeq
+    assert(target.size === 1)
+    Files.write(Paths.get(new java.net.URI(target.head)), "torn".getBytes)
     assert(store.mergeInsertOnly("t.bl",
-      df(Seq(("c", "p2", 3.0), ("d", "p2", 4.0))), Seq("id")) === 2)
-    assert(store.scan("t.bl").count() === 4)
-    // Plan shape: for a driver-local batch the optimizer folds the
-    // bloom predicate into the LocalRelation (ConvertToLocalRelation),
-    // so a definitely-new key ELIMINATES the probe join at plan time —
-    // no join, no target scan, nothing but the in-batch dedup...
-    val freshPlan = store.freshRows("t.bl", df(Seq(("e", "p1", 5.0))), Seq("id"))
-      .queryExecution.executedPlan.toString
-    assert(!freshPlan.contains("Join"),
-      s"bloom-miss batch should skip the probe join entirely:\n${freshPlan.take(3000)}")
-    // ...while a bloom-hit key keeps the anti-join probe
-    val hitPlan = store.freshRows("t.bl", df(Seq(("a", "p1", 1.0))), Seq("id"))
-      .queryExecution.executedPlan.toString
-    assert(hitPlan.contains("Join"),
-      s"bloom-hit batch must probe the target:\n${hitPlan.take(3000)}")
+      df(Seq(("m", "p2", 3.0), ("n", "p2", 4.0))), Seq("id")) === 2)
+    // ...while a bloom-hit key still probes it
+    intercept[org.apache.spark.SparkException] {
+      store.mergeInsertOnly("t.bl", df(Seq(("a", "p1", 1.0))), Seq("id"))
+    }
   }
 
   test("bloom sidecar survives restart and stays a superset across delete") {
     val root = tmpDir("storebl")
-    val s1 = new ParquetTableStore(spark, root)
+    val s1 = new LogTableStore(spark, root)
     s1.ensure("t.bl2", schema, Seq("part"))
     s1.enableKeyBloom("t.bl2", Seq("id"), expectedItems = 10000L)
     s1.mergeInsertOnly("t.bl2",
       df(Seq(("a", "p1", 1.0), ("b", "p2", 2.0))), Seq("id"))
+    s1.close()
     // fresh store instance, same root — sidecar is reloaded, replay dedups
-    val s2 = new ParquetTableStore(spark, root)
+    val s2 = new LogTableStore(spark, root)
     s2.enableKeyBloom("t.bl2", Seq("id"), expectedItems = 10000L)
     assert(s2.mergeInsertOnly("t.bl2",
       df(Seq(("a", "p1", 1.0), ("z", "p1", 9.0))), Seq("id")) === 1)
@@ -623,35 +423,43 @@ class TableStoreSpec extends SparkSpec {
     assert(s2.mergeInsertOnly("t.bl2",
       df(Seq(("a", "p1", 7.0))), Seq("id")) === 1)
     assert(s2.scan("t.bl2").filter(col("id") === "a").count() === 1)
+    // and across a second restart after the delete
+    s2.close()
+    val s3 = new LogTableStore(spark, root)
+    s3.enableKeyBloom("t.bl2", Seq("id"), expectedItems = 10000L)
+    assert(s3.mergeInsertOnly("t.bl2",
+      df(Seq(("a", "p1", 7.0), ("b", "p2", 2.0), ("z", "p1", 9.0))),
+      Seq("id")) === 0)
+    assert(s3.scan("t.bl2").count() === 3)
   }
 
   test("bloom sidecar survives a static-overwrite rewrite after restart") {
-    // the ADVICE r3 scenario: restart (cache empty, sidecar on disk) →
-    // compact (static overwrite deletes the whole table dir, sidecar
-    // included) → without the enableKeyBloom preload + post-swap
-    // re-persist, the next absorb would write a DELTA-ONLY filter and
-    // mergeInsertOnly would silently duplicate the old keys
+    // restart (cache empty, sidecar on disk only) → a compaction that
+    // replaces every live file → absorb → replay: the rewrite must not
+    // leave a filter that is missing the old keys, or mergeInsertOnly
+    // would silently duplicate them
     val root = tmpDir("storeblc")
-    val s1 = new ParquetTableStore(spark, root)
-    s1.ensure("t.blc", schema, Nil) // unpartitioned → upsert/compact are static
+    val s1 = new LogTableStore(spark, root)
+    s1.ensure("t.blc", schema, Nil)
     s1.enableKeyBloom("t.blc", Seq("id"), expectedItems = 10000L)
-    s1.mergeInsertOnly("t.blc",
-      df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0))), Seq("id"))
-    // restart: fresh instance, sidecar exists on disk only
-    val s2 = new ParquetTableStore(spark, root)
+    s1.mergeInsertOnly("t.blc", df(Seq(("a", "p1", 1.0))), Seq("id"))
+    s1.mergeInsertOnly("t.blc", df(Seq(("b", "p1", 2.0))), Seq("id"))
+    s1.close()
+    val s2 = new LogTableStore(spark, root)
     s2.enableKeyBloom("t.blc", Seq("id"), expectedItems = 10000L)
-    s2.compact("t.blc") // static overwrite — wipes and re-persists sidecar
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/t/blc/_keybloom.bin")),
-      "sidecar must be re-persisted after a static overwrite")
+    val (folded, written) = s2.compact("t.blc")
+    assert(folded === 2L && written === 1L)
+    assert(Files.exists(Paths.get(s"$root/t/blc/_keybloom.bin")),
+      "the sidecar must outlive the rewrite")
     // absorb a new key, then replay BOTH old and new keys: zero inserts
     assert(s2.mergeInsertOnly("t.blc", df(Seq(("c", "p1", 3.0))), Seq("id")) === 1)
     assert(s2.mergeInsertOnly("t.blc",
       df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0), ("c", "p1", 3.0))),
       Seq("id")) === 0)
-    // and a THIRD instance restoring from the re-persisted sidecar
-    // still dedups the original keys
-    val s3 = new ParquetTableStore(spark, root)
+    // and a THIRD instance restoring from the sidecar still dedups the
+    // original keys
+    s2.close()
+    val s3 = new LogTableStore(spark, root)
     s3.enableKeyBloom("t.blc", Seq("id"), expectedItems = 10000L)
     assert(s3.mergeInsertOnly("t.blc",
       df(Seq(("a", "p1", 1.0))), Seq("id")) === 0)
@@ -659,18 +467,18 @@ class TableStoreSpec extends SparkSpec {
   }
 
   test("interleaved instances over one root share the bloom cache (no stale fast path)") {
-    // pre-r9 each instance cached the sidecar privately: after another
-    // instance's merge absorbed new keys, the first instance's stale
-    // cache called those keys "definitely fresh", skipped the
-    // anti-join, and inserted silent duplicates. The cache now lives
-    // in the companion keyed by canonical root::table.
+    // a per-instance cache would go stale after another instance's
+    // merge absorbed new keys: the first instance would call those
+    // keys "definitely fresh", skip the anti-join, and insert silent
+    // duplicates. The cache lives in the companion keyed by canonical
+    // root::table.
     val root = tmpDir("storebli")
-    val s1 = new ParquetTableStore(spark, root)
+    val s1 = new LogTableStore(spark, root)
     s1.ensure("t.bli", schema, Seq("part"))
     s1.enableKeyBloom("t.bli", Seq("id"), expectedItems = 10000L)
     assert(s1.mergeInsertOnly("t.bli",
       df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0))), Seq("id")) === 2)
-    val s2 = new ParquetTableStore(spark, root)
+    val s2 = new LogTableStore(spark, root)
     s2.enableKeyBloom("t.bli", Seq("id"), expectedItems = 10000L)
     assert(s2.mergeInsertOnly("t.bli",
       df(Seq(("c", "p1", 3.0))), Seq("id")) === 1)
@@ -683,105 +491,52 @@ class TableStoreSpec extends SparkSpec {
   }
 
   test("single-writer guard: a concurrent second writer fails loudly") {
+    // the second writer reaches the table through a symlinked root — a
+    // separate process in miniature (no shared JVM lock) — and commits
+    // while the first writer's MERGE is mid-flight, after it resolved
+    // its base version. The stale MERGE must abort, never commit over
+    // the other writer's version.
     val root = tmpDir("lock")
-    val store = new ParquetTableStore(spark, root)
+    val link = Paths.get(s"$root-other")
+    Files.createSymbolicLink(link, Paths.get(root))
+    val store = new LogTableStore(spark, root)
+    val other = new LogTableStore(spark, link.toString)
     store.ensure("t.lk", schema, Nil)
     store.append("t.lk", df(Seq(("a", "p1", 1.0))))
-    // hold the advisory lock the way a concurrent writer would — the
-    // lock file lives OUTSIDE the table dir (a swapped/overwritten
-    // table dir would delete an in-dir lock mid-hold and silently
-    // readmit the race)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$root/__locks__"))
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(s"$root/__locks__/t.lk.lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    val held = ch.tryLock()
-    assert(held != null)
-    try {
-      intercept[java.util.ConcurrentModificationException] {
-        store.mergeUpsert("t.lk", df(Seq(("a", "p1", 2.0))), Seq("id"))
-      }
-      intercept[java.util.ConcurrentModificationException] {
-        store.delete("t.lk", col("id") === "a")
-      }
-      // the mutation paths that REWRITE the table directory must not
-      // delete the held lock file out from under the second writer
-      intercept[java.util.ConcurrentModificationException] {
-        store.append("t.lk", df(Seq(("z", "p1", 9.0))))
-      }
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/__locks__/t.lk.lock")))
-    } finally { held.release(); ch.close() }
-    // lock released → writes proceed, and sequential ops never self-block
+    def racedBy(write: => Unit): Throwable = {
+      TableStoreSpec.reset()
+      val t = new Thread(() => {
+        other.append("t.lk", df(Seq((s"x${System.nanoTime()}", "p1", 0.0))))
+        ()
+      })
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val writer = new Thread(() =>
+        try write catch { case e: Throwable => failure.set(e) })
+      writer.start()
+      TableStoreSpec.awaitPaused()
+      t.start(); t.join(120000)
+      TableStoreSpec.resume()
+      writer.join(120000)
+      failure.get
+    }
+    def gated(rows: Seq[(String, String, Double)]) = {
+      val gate = udf { (v: Double) => TableStoreSpec.pause(); v }
+      df(rows).withColumn("v", gate(col("v")))
+    }
+    assert(racedBy(store.mergeUpsert("t.lk", gated(Seq(("a", "p1", 2.0))),
+      Seq("id"))).isInstanceOf[java.util.ConcurrentModificationException])
+    assert(racedBy(store.mergeInsertOnly("t.lk", gated(Seq(("b", "p1", 2.0))),
+      Seq("id"))).isInstanceOf[java.util.ConcurrentModificationException])
+    // neither stale write landed; the racing appends did
+    assert(store.scan("t.lk").filter(col("id").isin("a", "b"))
+      .collect().map(_.getDouble(2)).toSeq === Seq(1.0))
+    assert(store.scan("t.lk").count() === 3)
+    // no race → writes proceed, and sequential ops never self-block
     store.mergeUpsert("t.lk", df(Seq(("a", "p1", 3.0))), Seq("id"))
     store.mergeInsertOnly("t.lk", df(Seq(("b", "p1", 4.0))), Seq("id"))
     assert(store.delete("t.lk", col("id") === "b") === 1)
-    assert(store.scan("t.lk").collect().map(_.getDouble(2)).toSeq === Seq(3.0))
-  }
-
-  test("compactRepair rewrites from surviving rows of a corrupt table") {
-    val root = tmpDir("repair")
-    val store = new ParquetTableStore(spark, root)
-    store.ensure("t.rp", schema, Nil)
-    store.append("t.rp", df(Seq(("a", "p1", 1.0), ("b", "p1", 2.0))))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/t/rp/part-corrupt.snappy.parquet"),
-      "torn write".getBytes)
-    // strict compact hits the corruption the lenient path must bypass
-    intercept[org.apache.spark.SparkException] { store.compact("t.rp") }
-    store.compactRepair("t.rp")
-    // repaired: strict scans work again, surviving rows intact
-    assert(store.scan("t.rp").collect().map(_.getString(0)).toSet
-      === Set("a", "b"))
-  }
-
-  test("diffSnapshots signature is boundary- and NULL-unambiguous") {
-    val sp = spark
-    import sp.implicits._
-    val store = freshStore
-    val s2 = StructType(Seq(StructField("id", StringType),
-      StructField("x", StringType), StructField("y", StringType)))
-    store.ensure("t.sig", s2)
-    store.append("t.sig", Seq(("k1", "ab", "c"), ("k2", null.asInstanceOf[String], "z"))
-      .toDF("id", "x", "y"))
-    val v1 = store.snapshot("t.sig")
-    // shift the column boundary ("ab","c")→("a","bc") and NULL→""
-    store.mergeUpsert("t.sig",
-      Seq(("k1", "a", "bc"), ("k2", "", "z")).toDF("id", "x", "y"), Seq("id"))
-    val v2 = store.snapshot("t.sig")
-    val changes = store.diffSnapshots("t.sig", v1, v2, Seq("id")).collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[String]("_change_type")).toMap
-    assert(changes === Map("k1" -> "update_postimage", "k2" -> "update_postimage"))
-  }
-
-  test("fileStats reads footer metrics; clustered files show narrow spans") {
-    val sp = spark
-    import sp.implicits._
-    val store = freshStore
-    val schema2 = StructType(Seq(
-      StructField("k", IntegerType), StructField("v", IntegerType)))
-    store.ensure("t.fs", schema2)
-    store.append("t.fs", (0 until 1024).map(i => (i, i * 2)).toDF("k", "v"))
-    // range-clustered compaction → disjoint k ranges per file
-    val (_, after) = store.compact("t.fs", targetBytes = 1024, Seq("k"))
-    assert(after >= 4, s"need several files, got $after")
-    val stats = store.fileStats("t.fs", Seq("k", "v")).collect()
-    val perFileK = stats.filter(_.getAs[String]("column") == "k")
-    assert(perFileK.length === after.toInt)
-    // row counts from footers sum to the table, no data read
-    assert(perFileK.map(_.getAs[Long]("rows")).sum === 1024L)
-    perFileK.foreach(r => assert(r.getAs[Long]("bytes") > 0))
-    // narrow spans: each file's k-range must be a fraction of 0..1023
-    perFileK.foreach { r =>
-      val span = r.getAs[String]("max_value").toInt -
-        r.getAs[String]("min_value").toInt
-      assert(span < 600, s"file not clustered: span $span of 1023")
-    }
-    // the union of file ranges covers the domain
-    assert(perFileK.map(_.getAs[String]("min_value").toInt).min === 0)
-    assert(perFileK.map(_.getAs[String]("max_value").toInt).max === 1023)
+    assert(store.scan("t.lk").filter(col("id") === "a")
+      .collect().map(_.getDouble(2)).toSeq === Seq(3.0))
   }
 
   test("bloom seeded from pre-existing data; upsert keys absorbed") {
@@ -798,4 +553,25 @@ class TableStoreSpec extends SparkSpec {
       df(Seq(("d", "p2", 4.0))), Seq("id")) === 0)
     assert(store.scan("t.bl3").count() === 4)
   }
+}
+
+/** Same-JVM latch the racing-writer test parks a MERGE's task on: a
+  * UDF in the incoming batch pauses until the racing commit lands. A
+  * companion object, so the executor-side UDF and the test thread see
+  * the same latches (local mode runs tasks in this JVM). */
+private object TableStoreSpec {
+  @volatile private var paused = new java.util.concurrent.CountDownLatch(1)
+  @volatile private var go = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    paused = new java.util.concurrent.CountDownLatch(1)
+    go = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pause(): Unit = {
+    paused.countDown()
+    go.await(120, java.util.concurrent.TimeUnit.SECONDS)
+  }
+  def awaitPaused(): Unit =
+    assert(paused.await(120, java.util.concurrent.TimeUnit.SECONDS),
+      "the MERGE never evaluated its incoming batch")
+  def resume(): Unit = go.countDown()
 }

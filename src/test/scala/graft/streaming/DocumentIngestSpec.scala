@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 
 class DocumentIngestSpec extends SparkSpec {
 
@@ -71,13 +71,15 @@ class DocumentIngestSpec extends SparkSpec {
   }
 
   test("streaming document ingest: enrich + watermark dedup + idempotent merge") {
-    runScenario(new ParquetTableStore(spark, tmpDir("docsingest")))
+    runScenario(new LogTableStore(spark, tmpDir("docsingest")))
   }
 
   test("document ingest on the transactional log store (Bloom-prefiltered digest merge)") {
-    // same scenario end to end; DocumentIngest.start enables the key
-    // Bloom on this backend too, so the digest MERGE (uniform md5 keys
-    // — the case zone pruning cannot help) runs the prefiltered path
-    runScenario(new graft.store.LogTableStore(spark, tmpDir("docsingestlog")))
+    // same scenario end to end with a checkpoint every second commit:
+    // DocumentIngest.start enables the key Bloom, so the digest MERGE
+    // (uniform md5 keys — the case zone pruning cannot help) runs the
+    // prefiltered path while the version gate reads across checkpoints
+    runScenario(new LogTableStore(spark, tmpDir("docsingestlog"),
+      checkpointInterval = 2))
   }
 }

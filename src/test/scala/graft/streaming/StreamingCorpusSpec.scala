@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.llmdata.{DedupFunctions, IncrementalCorpus}
 import graft.pipeline.{E2eDoc, LlmOrchestrator}
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 
 /** The continuously-maintained corpus gold must equal the batch
   * recompute no matter how the corpus is micro-batched — including
@@ -46,7 +46,7 @@ class StreamingCorpusSpec extends SparkSpec {
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
 
-    val store = new ParquetTableStore(spark, tmpDir("scorpus"))
+    val store = new LogTableStore(spark, tmpDir("scorpus"))
     val idx = s"s_corpus_idx_${System.nanoTime()}"
     val input = MemoryStream[E2eDoc]
     val job = new StreamingCorpusJob(store, idx, tmpDir("scorpusck"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.wiki.{BronzeTransform, Clock, FixtureData}
 import graft.wiki.FixtureData.KafkaRecord
 
@@ -36,7 +36,7 @@ class StreamingExtrasSpec extends SparkSpec {
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
     val input = MemoryStream[KafkaRecord]
-    val store = new ParquetTableStore(spark, tmpDir("dlqstore"))
+    val store = new LogTableStore(spark, tmpDir("dlqstore"))
     val job = new BronzeStreamingJob(store, "bronze.raw_events",
       tmpDir("dlqck"), Trigger.ProcessingTime(0),
       Clock.fixed("2024-01-02 15:00:00"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 import graft.wiki._
 import graft.wiki.FixtureData.KafkaRecord
 
@@ -17,7 +17,7 @@ class StreamingGoldSpec extends SparkSpec {
     val bclock = Clock.fixed("2024-01-02 15:00:00")
     val gclock = Clock.fixed("2024-01-02 16:00:00")
     val input = MemoryStream[KafkaRecord]
-    val store = new ParquetTableStore(spark, tmpDir("goldstream"))
+    val store = new LogTableStore(spark, tmpDir("goldstream"))
     val ck = tmpDir("goldck")
     val silverStream = SilverTransformStreaming(
       BronzeTransform(input.toDF(), bclock), bclock)
@@ -82,12 +82,12 @@ class StreamingGoldSpec extends SparkSpec {
     val silverBatch = SilverTransform(
       BronzeTransform(FixtureData.kafkaDf(spark), bclock), bclock)
     // truth: one clean fold of every family
-    val truth = new ParquetTableStore(spark, tmpDir("goldtruth"))
+    val truth = new LogTableStore(spark, tmpDir("goldtruth"))
     IncrementalGold.refreshAll(truth, silverBatch, gclock)
     // crash scenario: batch 0's HOURLY fold completed and committed its
     // family marker, then the process died before risk/daily —
     // foreachBatch replays batch 0 whole
-    val store = new ParquetTableStore(spark, tmpDir("goldpartial"))
+    val store = new LogTableStore(spark, tmpDir("goldpartial"))
     val ck = tmpDir("goldpartialck")
     IncrementalGold.refresh(store, silverBatch, gclock) // hourly fold ran
     new BatchMarker(ck, "graft_last_folded_hourly").commit(0L)

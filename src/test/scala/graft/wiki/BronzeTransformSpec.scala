@@ -69,6 +69,28 @@ class BronzeTransformSpec extends SparkSpec {
     assert(r.isNullAt(r.fieldIndex("event_timestamp"))) // both ts paths bad
   }
 
+  test("no-payload and unparseable envelopes reach only the DLQ") {
+    val sp = spark
+    import sp.implicits._
+    val clock = Clock.fixed("2024-01-02 15:00:00")
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 15:00:00")
+    val good = FixtureData.kafkaRecords.head
+    val garbage = FixtureData.KafkaRecord("raw-events", 0, 99L, ts,
+      "not json at all {{{")
+    val nodata = FixtureData.KafkaRecord("raw-events", 0, 100L, ts,
+      """{"id": "no-payload-001", "_processing": {"ingested_at": "t", "producer_version": "v", "environment": "e"}}""")
+    val input = Seq(good, garbage, nodata).toDF()
+    // the good path keeps only the well-formed envelope...
+    assert(BronzeTransform(input, clock).select("event_id").as[String]
+      .collect().toSeq === Seq("test-event-001"))
+    // ...and the DLQ holds exactly the other two, one row each
+    val dlq = BronzeTransform.dlq(input, clock)
+      .select("raw_value", "error_reason").as[(String, String)].collect()
+    assert(dlq.map(_._2).sorted.toSeq ===
+      Seq("missing_data_payload", "unparseable_envelope"))
+    assert(dlq.map(_._1).toSet === Set(garbage.value, nodata.value))
+  }
+
   test("injected clock stamps bronze_processed_at deterministically") {
     val stamps = bronze.select("bronze_processed_at").distinct().collect()
     assert(stamps.length === 1)

@@ -3,7 +3,7 @@ package graft.wiki
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.store.ParquetTableStore
+import graft.store.LogTableStore
 
 class IncrementalGoldSpec extends SparkSpec {
 
@@ -77,7 +77,7 @@ class IncrementalGoldSpec extends SparkSpec {
 
   test("incremental refresh over batches equals the full A1 recompute") {
     val root = Files.createTempDirectory("incgold").toString
-    val store = new ParquetTableStore(spark, root)
+    val store = new LogTableStore(spark, root)
     // three disjoint batches partitioned by event_id hash — arbitrary
     // split, together exactly the full silver set
     (0 until 3).foreach { b =>
@@ -105,7 +105,7 @@ class IncrementalGoldSpec extends SparkSpec {
 
   test("refresh touches only the batch's dates; other state is untouched") {
     val root = Files.createTempDirectory("incgold2").toString
-    val store = new ParquetTableStore(spark, root)
+    val store = new LogTableStore(spark, root)
     IncrementalGold.refresh(store, silver, clock)
     val before = store.scan("gold.hourly_stats_state")
       .select("stat_date").distinct().collect().map(_.getString(0)).sorted
@@ -153,7 +153,7 @@ class IncrementalGoldSpec extends SparkSpec {
 
   test("incremental risk + daily refresh over batches equals the batch recompute") {
     val root = Files.createTempDirectory("incrisk").toString
-    val store = new ParquetTableStore(spark, root)
+    val store = new LogTableStore(spark, root)
     // three disjoint batches, hash-split — together exactly bigSilver
     (0 until 3).foreach { b =>
       val batch = bigSilver.filter(pmod(xxhash64(col("event_id")), lit(3)) === b)
