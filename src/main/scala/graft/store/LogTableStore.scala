@@ -650,6 +650,14 @@ class LogTableStore(spark: SparkSession, root: String,
                       partitionBy: Seq[String] = Nil): Unit =
     jvmLock(name).synchronized {
       if (!exists(name)) {
+        // a table written by the retired directory-listing store has
+        // `_meta.json` + parquet but no `_log`: creating an empty log
+        // beside it would silently hide every existing row
+        if (Files.exists(tableDir(name).resolve("_meta.json")))
+          throw new IllegalStateException(
+            s"table $name at ${tableDir(name)} has _meta.json but no _log: " +
+              "it was written by the retired parquet store, which this store " +
+              "cannot read — re-ingest into a fresh store root")
         // CAS loss here means someone else created it — IF NOT EXISTS
         tryCommit(name, Commit(1L, "create", schema, partitionBy,
           Nil, Nil, full = true))

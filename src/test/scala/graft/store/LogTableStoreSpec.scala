@@ -47,6 +47,21 @@ class LogTableStoreSpec extends SparkSpec {
     assert(store.scanRange("t.base", "part", "p1", "p1").count() === 1)
   }
 
+  test("ensure refuses a table directory the retired parquet store wrote") {
+    // `_meta.json` + data files, no `_log`: an empty log created beside
+    // them would make every old row silently vanish
+    val root = freshRoot
+    Files.createDirectories(Paths.get(root, "t/old"))
+    Files.write(Paths.get(root, "t/old/_meta.json"), "{}".getBytes)
+    val store = storeAt(root)
+    val e = intercept[IllegalStateException] {
+      store.ensure("t.old", schema)
+    }
+    assert(e.getMessage.contains("_meta.json"))
+    assert(!store.exists("t.old"))
+    assert(!Files.exists(Paths.get(root, "t/old/_log")))
+  }
+
   test("atomicity: staged-but-uncommitted files are invisible; a new store instance sees only commits") {
     val root = freshRoot
     val store = storeAt(root)

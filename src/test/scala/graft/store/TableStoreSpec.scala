@@ -527,10 +527,19 @@ class TableStoreSpec extends SparkSpec {
       Seq("id"))).isInstanceOf[java.util.ConcurrentModificationException])
     assert(racedBy(store.mergeInsertOnly("t.lk", gated(Seq(("b", "p1", 2.0))),
       Seq("id"))).isInstanceOf[java.util.ConcurrentModificationException])
-    // neither stale write landed; the racing appends did
+    // deletes park in their probe: the predicate, then the key frame
+    val gate = udf { (v: Double) => TableStoreSpec.pause(); v }
+    assert(racedBy(store.delete("t.lk", gate(col("v")) === 1.0))
+      .isInstanceOf[java.util.ConcurrentModificationException])
+    val gateKey = udf { (k: String) => TableStoreSpec.pause(); k }
+    assert(racedBy(store.deleteKeys("t.lk",
+      df(Seq(("a", "p1", 1.0))).select(gateKey(col("id")).as("id")),
+      Seq("id"))).isInstanceOf[java.util.ConcurrentModificationException])
+    // no stale write landed — "a" survived both deletes unchanged; the
+    // racing appends did land
     assert(store.scan("t.lk").filter(col("id").isin("a", "b"))
       .collect().map(_.getDouble(2)).toSeq === Seq(1.0))
-    assert(store.scan("t.lk").count() === 3)
+    assert(store.scan("t.lk").count() === 5)
     // no race → writes proceed, and sequential ops never self-block
     store.mergeUpsert("t.lk", df(Seq(("a", "p1", 3.0))), Seq("id"))
     store.mergeInsertOnly("t.lk", df(Seq(("b", "p1", 4.0))), Seq("id"))
