@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -44,69 +43,9 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (dd12's bucketed LSH index) land outside the repo
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.nanoTime()}")
-      // reference semantics: Spark 3 non-ANSI — malformed field values
-      // cast to NULL instead of throwing (bad-typed JSON fields must
-      // degrade gracefully, not kill the streaming job)
-      .config("spark.sql.ansi.enabled", "false")
-      // r17 (optimization guide §2.2, many-small-blocks): below the
-      // bypass-merge threshold (default 200 reduce partitions) Spark's
-      // BypassMergeSortShuffleWriter opens one file PER REDUCE
-      // PARTITION per map task — M×R file creations per shuffle. At
-      // this bench's R = cores that is ~1k syscall-bound file opens
-      // per exchange; jstack sampling showed executor CPU dominated by
-      // FileOutputStream.open0/mmap, and task-CPU for the signing
-      // pipeline dropped 6.5 s → 2.5 s with the sort writer (one
-      // spill file per map task) forced. Scale-neutral: production
-      // reduce counts exceed 200, where the bypass writer is never
-      // chosen and this setting is a no-op.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // r17 (optimization guide §6, I/O layout): Hadoop's default
-      // file:// filesystem is ChecksumFileSystem — every parquet
-      // part, _SUCCESS marker, and staged commit file gets a hidden
-      // .crc sidecar, DOUBLING creates/renames/deletes for every
-      // table write (measured: e11's build+append+compact lifecycle
-      // warm wall 4.5 → 3.5 s with the raw FS). Client-side .crc
-      // sidecars are a local-mode artifact — HDFS checksums
-      // server-side and object-store connectors never write them —
-      // and parquet carries its own footer/page integrity. Inherently
-      // scale-neutral: the override binds to the file:// scheme only.
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      // r17: the suite executes 119 queries × several generated
-      // classes each per pass — far over the 100-entry default codegen
-      // class cache, so every pass re-Janino-compiles every stage
-      // (pure CPU overhead re-paid per iteration; a production driver
-      // serving a wide query mix raises this the same way). Memory
-      // cost is tens of MB of compiled classes.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val cpuListener = new CpuTimeListener
     spark.sparkContext.addSparkListener(cpuListener)
-    // listener-bus drain via reflection: SparkContext.listenerBus and
-    // LiveListenerBus.waitUntilEmpty are private[spark] in Scala but
-    // public in bytecode (qualified-private compiles to public) — no
-    // setAccessible needed. Bounded wait; a timeout degrades to a
-    // slightly-misattributed tail, never a hang.
-    val drainBus: () => Unit = {
-      try {
-        val bus = classOf[org.apache.spark.SparkContext]
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        val wait = bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        () => try wait.invoke(bus, java.lang.Long.valueOf(10000L))
-              catch { case _: Throwable => () }
-      } catch { case _: Throwable => () => () }
-    }
     // process CPU (driver + local-mode executor threads share one JVM):
     // the synchronous cross-check for the listener ruler — includes
     // codegen/GC/listener threads the task metric doesn't, excludes
@@ -178,7 +117,7 @@ object Bench {
       // task-end events land on the query that ran them, and OUTSIDE
       // the wall measurement concern — the drain is microseconds when
       // the bus is healthy and its cost is a bench artifact either way.
-      drainBus()
+      GraftSession.drainListenerBus(spark)
       val cpu0 = cpuListener.taskCpuNanos.get()
       val proc0 = processCpuNanos
       val t0 = System.nanoTime()
@@ -186,7 +125,7 @@ object Bench {
         try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           val wallSec = (System.nanoTime() - t0) / 1e9
-          drainBus()
+          GraftSession.drainListenerBus(spark)
           cpuSamples(name) = cpuSamples(name) :+
             (cpuListener.taskCpuNanos.get() - cpu0) / 1e9
           val p1 = processCpuNanos
@@ -199,22 +138,7 @@ object Bench {
           procSamples(name) = procSamples(name) :+ -1.0
           -1.0
         }
-        finally {
-          spark.catalog.clearCache()
-          // operators that materialize intermediates via localCheckpoint
-          // (CC rounds, LSH signatures, PQ codes) leave their blocks
-          // behind until GC + ContextCleaner get around to them; across
-          // 100+ queries × iters the block manager fills and every later
-          // query pays the memory pressure — the r5 lockstep drift.
-          // INVARIANT this sweep relies on: no RDD-level state may
-          // outlive a query. Sweeping destroys localCheckpoint blocks
-          // irrecoverably (lineage is truncated — a later action on a
-          // swept frame throws CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so
-          // any cross-query memo must store *disk table names* (as
-          // LlmQueries.annIndexMemo does), never a persisted frame.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+        finally GraftSession.release(spark) // see its INVARIANT note
       samples(name) = samples(name) :+ elapsed
     }
     def median(ts: Vector[Double]): Double =

@@ -1,38 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round instrument (r17): dump `.explain("formatted")`
   * for the named declared queries to `<outDir>/<query>_<suffix>.txt`
-  * under the bench's exact session config. Not part of the driver
+  * under the [[GraftSession]] contract. Not part of the driver
   * contract.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_GRAFT_SF_DIR=... \
   *   sbt "runMain graft.PlanDump <outDir> <suffix> <q1,q2,...>"
+  * `SPARK_GRAFT_CPUS` sets the cores (default 4, as for every
+  * [[GraftSession]]).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, qlist) = args.take(3)
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.nanoTime()}")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1") // as Bench
-      // no client-side .crc sidecars on file:// — see the Bench
-      // session comment (halves file ops per table write; local-only)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       try {
@@ -45,11 +30,7 @@ object PlanDump {
         println(s"[plandump] wrote $name ($suffix)")
       } catch { case e: Throwable =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")
-      } finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally GraftSession.release(spark)
     }
     spark.stop()
   }

@@ -1,18 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.ConcurrentHashMap
 
 /** Optimization-round instrument (r17, guide §1): run ONE declared query
-  * under the bench's exact session config and print a per-Spark-job time
+  * under the [[GraftSession]] contract and print a per-Spark-job time
   * breakdown — job id, duration, number of stages/tasks, and the job
   * group/description — so "which of this lifecycle query's ~40 actions
   * costs the seconds" is a measurement instead of a guess. Not part of
   * the driver contract; Bench is unchanged.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_GRAFT_SF_DIR=... \
   *   sbt "runMain graft.ProfileQuery <query> [iters]"
+  * `SPARK_GRAFT_CPUS` sets the cores (default 4, as for every
+  * [[GraftSession]]).
   */
 object ProfileQuery {
   final class JobTimeListener extends SparkListener {
@@ -52,29 +53,7 @@ object ProfileQuery {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val iters = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.nanoTime()}")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1") // as Bench
-      // no client-side .crc sidecars on file:// — see the Bench
-      // session comment (halves file ops per table write; local-only)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")   // as Bench
-      .config("spark.ui.enabled", "false")
-    // experiment knob: SPARK_GRAFT_CONF="k=v;k2=v2" extra session confs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val listener = new JobTimeListener
     spark.sparkContext.addSparkListener(listener)
     spark.range(100000).selectExpr("sum(id)").collect()
@@ -87,13 +66,7 @@ object ProfileQuery {
       val tBuild = (System.nanoTime() - t0) / 1e9
       frame.write.mode("overwrite").format("noop").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // drain listener bus
-      try {
-        val bus = classOf[org.apache.spark.SparkContext]
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      } catch { case _: Throwable => () }
+      GraftSession.drainListenerBus(spark)
       import scala.jdk.CollectionConverters._
       val infos = listener.order.asScala.map(id => id -> listener.jobs.get(id))
       val jobSum = infos.map { case (_, j) => (j.end - j.start) / 1e3 }.sum
@@ -107,9 +80,7 @@ object ProfileQuery {
           println(f"[profile]   job=$id%4d ${ms}%6d ms cpu=${j.cpu.get / 1e6}%7.0f ms " +
             f"stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(100)}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark)
     }
     }
     spark.stop()

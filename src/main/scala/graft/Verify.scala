@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (dd12's bucketed LSH index) land outside the repo
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.nanoTime()}")
-      // reference semantics: Spark 3 non-ANSI — malformed field values
-      // cast to NULL instead of throwing (bad-typed JSON fields must
-      // degrade gracefully, not kill the streaming job)
-      .config("spark.sql.ansi.enabled", "false")
-      // r17: one spill file per map task instead of one per (map,
-      // reduce) pair — see the Bench session comment; no-op at
-      // production reduce counts
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // no client-side .crc sidecars on file:// — see the Bench
-      // session comment (halves file ops per table write; local-only)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // a failed query must be a LOUD artifact, not just a stderr line —
     // in r6 two queries (w04/j06) silently dropped out of the driver's
@@ -44,14 +20,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures += name -> Option(e.getMessage).getOrElse(e.getClass.getName)
       }
-      finally {
-        spark.catalog.clearCache()
-        // free checkpoint blocks operators leave behind (CC rounds,
-        // LSH signatures, PQ codes) — same sweep as Bench, so a
-        // 100+-query dump doesn't accumulate block-manager pressure
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      // free checkpoint blocks operators leave behind, so a
+      // 100+-query dump doesn't accumulate block-manager pressure
+      finally GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,14 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.LongType
 
-/** SQL exposure of the custom Catalyst expressions, both ways Spark
-  * supports: [[GraftFunctions.register]] for an existing session, and
-  * [[GraftExtensions]] for
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+/** SQL exposure of the custom Catalyst expressions: [[GraftExtensions]]
+  * injects [[GraftFunctions.all]] into every session
+  * [[graft.GraftSession]] builds (and into any session launched with
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`).
   */
 object GraftFunctions {
 
@@ -54,13 +54,6 @@ object GraftFunctions {
       case n: Number => n.doubleValue()
       case other => throw new IllegalArgumentException(
         s"percentage must be numeric, got $other")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

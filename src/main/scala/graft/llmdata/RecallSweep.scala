@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recall/latency sweep over the persisted IVF-PQ index's two serving
@@ -20,22 +20,13 @@ import org.apache.spark.sql.functions._
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 java -cp ... \
   *     graft.llmdata.RecallSweep
+  * `SPARK_GRAFT_CPUS` sets the cores (default 4, as for every
+  * [[graft.GraftSession]]).
   */
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.nanoTime()}")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val emb = graft.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 20)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -18,6 +18,8 @@ import graft.streaming.{DocumentIngest, StreamingLshJob}
   *
   * Usage: runMain graft.pipeline.LlmPipelineMain <docsParquetDir>
   *   <storeRoot> [cycles=1] [intervalSec=0]
+  * `SPARK_MASTER` overrides the master, which is otherwise
+  * `local[$SPARK_GRAFT_CPUS]` (default 4; see [[GraftSession]]).
   */
 object LlmPipelineMain {
 
@@ -34,20 +36,10 @@ object LlmPipelineMain {
     val cycles = rest.headOption.map(_.toInt).getOrElse(1)
     val intervalSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-llm-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // the LSH index/pairs tables are catalog-managed — keep them
-      // beside the store so the deployment is one directory
-      .config("spark.sql.warehouse.dir", s"$storeRoot/__warehouse__")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the LSH index/pairs tables are catalog-managed — keep them
+    // beside the store so the deployment is one directory
+    val spark = GraftSession(master = sys.env.get("SPARK_MASTER"),
+      warehouseDir = Some(s"$storeRoot/__warehouse__"))
 
     val store = new LogTableStore(spark, storeRoot)
     def src = spark.readStream.schema(DocSchema).parquet(docsDir)

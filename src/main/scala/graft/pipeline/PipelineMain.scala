@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.store.LogTableStore
 import graft.streaming.{BronzeStreamingJob, EventSource}
@@ -13,6 +13,8 @@ import graft.wiki.Clock
   *
   * Usage: runMain graft.pipeline.PipelineMain <envelopeJsonDir>
   *   <storeRoot> <startDate> <endDate> [cycles=1] [intervalSec=0]
+  * `SPARK_MASTER` overrides the master, which is otherwise
+  * `local[$SPARK_GRAFT_CPUS]` (default 4; see [[GraftSession]]).
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
@@ -20,20 +22,7 @@ object PipelineMain {
     val cycles = rest.headOption.map(_.toInt).getOrElse(1)
     val intervalSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference semantics: Spark 3 non-ANSI — malformed field values
-      // cast to NULL instead of throwing (bad-typed JSON fields must
-      // degrade gracefully, not kill the streaming job)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(master = sys.env.get("SPARK_MASTER"))
 
     val store = new LogTableStore(spark, storeRoot)
     val ckpt = s"$storeRoot/__checkpoints__/bronze"

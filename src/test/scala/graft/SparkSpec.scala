@@ -59,31 +59,11 @@ trait SparkSpec extends AnyFunSuite {
   /** Shuffle-write-only view of [[execBytesOf]]. */
   def shuffleWriteBytesOf(thunk: => Unit): Long =
     execBytesOf(thunk).shuffleWrite
-
-  /** Free checkpoint blocks operators leave behind (same sweep as
-    * Bench/Verify — see the invariant note in Bench.scala). */
-  def sweepPersistentRdds(): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference semantics: Spark 3 non-ANSI — malformed field values
-      // cast to NULL instead of throwing (bad-typed JSON fields must
-      // degrade gracefully, not kill the streaming job)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The [[GraftSession]] contract at 4 cores: the shuffle-byte and
+    * partition-count guards are calibrated to that width, whatever
+    * `SPARK_GRAFT_CPUS` the run sets. */
+  lazy val session: SparkSession = GraftSession(cores = 4)
 }

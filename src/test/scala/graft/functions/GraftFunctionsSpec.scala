@@ -5,7 +5,6 @@ import graft.SparkSpec
 class GraftFunctionsSpec extends SparkSpec {
 
   test("custom expressions are callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  poly_hash('the') AS h,
@@ -34,7 +33,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("lsh_band_keys matches the builtin transform/concat_ws formulation") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  lsh_band_keys(array(5L, 17L, 3L, 99L, 42L, 7L, 1L, 8L), 4, 2) AS k,
@@ -70,7 +68,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("int8 quantization: half-away rounding, zero vector, exact self dot") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  float_max_abs(array(CAST(-1.0 AS FLOAT), CAST(1.0 AS FLOAT),
@@ -90,7 +87,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("float_dot matches builtin zip_with/aggregate NULL semantics") {
-    GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT
         |  float_dot(array(CAST(1.0 AS FLOAT)),
@@ -118,7 +114,6 @@ class GraftFunctionsSpec extends SparkSpec {
     // low-order bits when x is even — neighbors stay numerically close
     assert(math.abs(ZOrderExpression.interleave2(4L, 4L) -
       ZOrderExpression.interleave2(5L, 4L)) === 2L)
-    GraftFunctions.register(spark)
     val viaSql = spark.sql("SELECT zorder2(10, 5) AS z").collect()(0).getLong(0)
     assert(viaSql === 153L)
   }

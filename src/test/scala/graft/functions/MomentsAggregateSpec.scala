@@ -111,7 +111,6 @@ class MomentsAggregateSpec extends SparkSpec {
   }
 
   test("callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val sp = spark
     import sp.implicits._
     Seq[java.lang.Double](1.0, 2.0, null).toDF("x")

@@ -150,7 +150,6 @@ class ProfileAggregateSpec extends SparkSpec {
   }
 
   test("callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val sp = spark
     import sp.implicits._
     Seq(1.0, 2.0, 2.0, 3.0).toDF("x").createOrReplaceTempView("cp_probe")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.dq.{GateResult, Notifier}
 import graft.llmdata.{AnnIndex, DedupFunctions, Similarity}
 import graft.store.LogTableStore
@@ -211,7 +211,7 @@ class LlmStreamingEndToEndSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"DROP TABLE IF EXISTS ${t}_params")
     }
-    sweepPersistentRdds()
+    GraftSession.release(spark)
   }
 
   test("streamed ingest+index+append → orchestrated cycle ≡ batch recompute") {

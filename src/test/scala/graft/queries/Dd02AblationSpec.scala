@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.llmdata.DedupFunctions
 
 /** Pins the dd02 exchange-payload decision (see the design note on
@@ -22,7 +22,7 @@ class Dd02AblationSpec extends SparkSpec {
   test("serving (ids+rejoin) shape: same output, less shuffle than carried") {
     for (sf <- Seq("sf0.01", "sf0.1")) {
       val docs = graft.Tables.documents(spark, s"/root/testdata/$sf")
-      def sweep() = sweepPersistentRdds()
+      def sweep() = GraftSession.release(spark)
       val (bCarried, nCarried) =
         bytesOf(DedupFunctions.ngramJaccardLshCarried(docs))
       sweep()

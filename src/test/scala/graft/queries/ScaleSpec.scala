@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, SparkEntry}
+import graft.{GraftSession, SparkSpec, SparkEntry}
 import org.apache.spark.sql.functions._
 
 /** Scale-ratio harness: runs the superlinear-risk query family (the
@@ -129,7 +129,7 @@ class ScaleSpec extends SparkSpec {
     if (servesFromPersistedIndex(name)) {
       SparkEntry.queries(name)(spark, dir)
         .write.mode("overwrite").format("noop").save()
-      sweepPersistentRdds()
+      GraftSession.release(spark)
     }
     // the frame is CONSTRUCTED inside the listener window too: some
     // query fns (dd08's connected components) execute their iterative
@@ -144,7 +144,7 @@ class ScaleSpec extends SparkSpec {
       df.write.mode("overwrite").format("noop").save()
     }
     val rows = df.count() // outside the listener window
-    sweepPersistentRdds() // free the pair generators' checkpoint blocks
+    GraftSession.release(spark) // free the pair generators' checkpoint blocks
     (bytes, rows)
   }
 
@@ -156,7 +156,7 @@ class ScaleSpec extends SparkSpec {
   private def dd03RowsRatioOf(lo: String, hi: String): Double = {
     def rows(d: String) = SparkEntry.queries("dd03_minhash_lsh")(spark, d).count()
     val r = rows(hi).toDouble / rows(lo).max(1L)
-    sweepPersistentRdds()
+    GraftSession.release(spark)
     r
   }
   private lazy val dd03RowsRatio: Double = dd03RowsRatioOf(small, big)

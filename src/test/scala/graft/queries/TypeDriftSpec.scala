@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, SparkEntry, Tables}
+import graft.{GraftSession, SparkSpec, SparkEntry, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -83,8 +83,7 @@ class TypeDriftSpec extends SparkSpec {
           case e: Throwable => Some(s"$name threw: ${e.getMessage.take(120)}")
         }
       }
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    GraftSession.release(spark)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 

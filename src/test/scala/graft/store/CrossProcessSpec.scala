@@ -58,8 +58,7 @@ class CrossProcessSpec extends SparkSpec {
       val artifact = Paths.get(root, s"artifact-w$w.txt").toString
       val out = Paths.get(root, s"child-w$w.log").toFile
       val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx3g", "-Dspark.ui.enabled=false",
-        "-cp", cp, "graft.store.CrossProcessWriterMain",
+        "-Xmx3g", "-cp", cp, "graft.store.CrossProcessWriterMain",
         root, table, s"w$w", commitsEach.toString, artifact))
       val pb = new ProcessBuilder(cmd.asJava)
       pb.directory(Files.createTempDirectory(s"xproc-cwd-$w").toFile)

@@ -2,7 +2,6 @@ package graft.store
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.SparkSession
 
 /** Child JVM for the TRUE cross-process contention arm
   * (CrossProcessSpec): a real second process — its own page cache
@@ -31,16 +30,7 @@ object CrossProcessWriterMain {
     var probeError = ""
     var t0 = 0L
     var t1 = 0L
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-xproc-$writerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory(s"xproc-wh-$writerId").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cores = 2)
     try {
       import spark.implicits._
       val store = new LogTableStore(spark, root, checkpointInterval = 8)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.llmdata.{DedupFunctions, IncrementalCorpus}
 import graft.pipeline.{E2eDoc, LlmOrchestrator}
 import graft.store.LogTableStore
@@ -105,7 +105,7 @@ class StreamingCorpusSpec extends SparkSpec {
       keeperSet(batchKeepers))
 
     spark.sql(s"DROP TABLE IF EXISTS $idx")
-    sweepPersistentRdds()
+    GraftSession.release(spark)
   }
 
   test("maintenance cadence bounds index and cluster-state file accretion") {
@@ -158,6 +158,6 @@ class StreamingCorpusSpec extends SparkSpec {
       "maintenance cadence broke the fold ≡ batch equivalence")
     store.close()
     spark.sql(s"DROP TABLE IF EXISTS $idx")
-    sweepPersistentRdds()
+    GraftSession.release(spark)
   }
 }
