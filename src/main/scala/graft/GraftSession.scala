@@ -33,10 +33,8 @@ import graft.functions.GraftExtensions
   */
 object GraftSession {
 
-  /** Local-mode cores: `SPARK_GRAFT_CPUS`, default 4. */
-  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
-
-  def apply(cores: Int = envCores,
+  /** `cores` defaults to `SPARK_GRAFT_CPUS`, else 4. */
+  def apply(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt),
             master: Option[String] = None,
             warehouseDir: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
@@ -49,7 +47,7 @@ object GraftSession {
       // tables) land outside the repo
       .config("spark.sql.warehouse.dir", warehouseDir.getOrElse(
         Files.createTempDirectory("graft-warehouse").toString))
-      // r17 (optimization guide §2.2, many-small-blocks): below the
+      // r17, many small shuffle blocks: below the
       // bypass-merge threshold (default 200 reduce partitions) Spark's
       // BypassMergeSortShuffleWriter opens one file PER REDUCE
       // PARTITION per map task — M×R file creations per shuffle. At
@@ -122,13 +120,13 @@ object GraftSession {
     * `SparkContext.listenerBus` and `LiveListenerBus.waitUntilEmpty`
     * are private[spark] in Scala but public in bytecode
     * (qualified-private compiles to public), so reflection needs no
-    * setAccessible. A timeout degrades to a slightly-misattributed
-    * tail, never a hang. */
-  def drainListenerBus(spark: SparkSession, timeoutMs: Long = 10000L): Unit =
+    * setAccessible. The wait is capped at 10 s: a timeout degrades to a
+    * slightly-misattributed tail, never a hang. */
+  def drainListenerBus(spark: SparkSession): Unit =
     try {
       val bus = classOf[SparkContext].getMethod("listenerBus")
         .invoke(spark.sparkContext)
       bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(timeoutMs))
+        .invoke(bus, java.lang.Long.valueOf(10000L))
     } catch { case NonFatal(_) => () }
 }

@@ -31,7 +31,7 @@ class GraftSessionSpec extends SparkSpec {
       === "WARN")
   }
 
-  test("store writes leave no .crc sidecars on file://") {
+  test("store and plain parquet writes leave no .crc sidecars on file://") {
     val root = tmpDir("graft-session-crc")
     val store = new LogTableStore(spark, root)
     val sp = spark
@@ -41,6 +41,9 @@ class GraftSessionSpec extends SparkSpec {
     store.append("t.crc", rows)
     store.mergeUpsert("t.crc", Seq((2L, "B"), (3L, "c")).toDF("k", "s"), Seq("k"))
     assert(store.scan("t.crc").count() === 3L)
+    // the store moves only parquet parts out of staging, so a plain
+    // write is what shows a sidecar the filesystem still creates
+    spark.range(10).write.parquet(s"$root/plain")
     val files = Files.walk(Paths.get(root))
     try {
       val crcs = files.filter(_.getFileName.toString.endsWith(".crc")).count()
